@@ -182,14 +182,20 @@ def main(argv: list[str] | None = None) -> int:
         else:  # pragma: no cover
             return 2
     except S3SparkError as e:
-        # reference exit-code taxonomy (exit_codes.py:1-3; exit 1 on
-        # zero matches)
+        # a verb that failed part-way reports the files it already
+        # handled, then exits with the reference exit-code taxonomy
+        # (exit_codes.py:1-3; exit 1 on zero matches)
+        _print_files(args.verb, e.completed, e.planned)
         print(f"s3spark {args.verb}: {e}", file=sys.stderr)
         return e.exit_code
-    for i, (src, dst) in enumerate(res.files, start=1):
-        # reference prints per-file "i of N" progress
-        print(f"{args.verb}: {i} of {res.count}: {src}" + (f" -> {dst}" if dst else ""))
+    _print_files(args.verb, res.files, res.count)
     return 0
+
+
+def _print_files(verb: str, files, total: int) -> None:
+    for i, (src, dst) in enumerate(files, start=1):
+        # reference prints per-file "i of N" progress
+        print(f"{verb}: {i} of {total}: {src}" + (f" -> {dst}" if dst else ""))
 
 
 if __name__ == "__main__":  # pragma: no cover

@@ -15,9 +15,17 @@ EXIT_CODE_NO_MATCHES = 1
 
 
 class S3SparkError(Exception):
-    """Base error; ``exit_code`` mirrors the reference taxonomy."""
+    """Base error; ``exit_code`` mirrors the reference taxonomy.
+
+    A verb that fails part-way sets ``completed`` to the (source,
+    destination) pairs it finished before the failure (destination
+    None for remove) and ``planned`` to the number of files it set
+    out to handle, so a caller can report what already happened.
+    """
 
     exit_code = 1
+    completed: tuple = ()
+    planned: int = 0
 
 
 class S3FileNotFound(S3SparkError):
@@ -42,3 +50,10 @@ class S3NoMatches(S3SparkError):
     """Zero files matched the pattern (reference ``sys.exit(1)``)."""
 
     exit_code = EXIT_CODE_NO_MATCHES
+
+
+class S3TransferFailed(S3SparkError):
+    """A copy or delete failed outside the taxonomy above (exit 1, as
+    the reference's uncaught exception would)."""
+
+    exit_code = 1

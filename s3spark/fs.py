@@ -13,24 +13,37 @@ control surface (SURVEY.md §2.1):
 - move (copy+delete, R19 move_file.py:125-154)
 - remove (R20 remove_files.py:96-116)
 
-Design (SURVEY.md §3.2): the *matched-file set* is computed as a
-DataFrame (distributed listing via the ``binaryFile`` source when the
-prefix is huge; driver-side ``FileSystem.listFiles`` for metadata-only
-listings), while the verbs themselves are Hadoop FileSystem calls —
-metadata/byte operations, path-scheme agnostic, so ``file://`` in tests
-and ``s3a://`` in production traverse identical code.
+Design: every listing is one walk, :func:`_walk`.  The JVM lists the
+prefix with ``FileSystem.listFiles`` into a ``java.util.List`` and
+hands it to Python as a few joined strings, so a listing costs a
+constant number of py4j round trips whatever its size, and ``file://``
+in tests and ``s3a://`` in production run the same code.
+
+The verbs plan on the driver: one walk, Python ``re.search`` over the
+store-relative key (the reference's own matcher, download_file.py:226),
+a Python sort, then one Hadoop copy or delete per file through JVM
+handles resolved once per session (:class:`_Jvm`).  They start no
+Spark job.  The *matched-file set as a DataFrame* (SURVEY.md §3.2)
+is the listing API's design: :func:`list_files`,
+:func:`list_files_auto` (driver table, or a distributed ``binaryFile``
+scan past a threshold) and :func:`match_files`.
 
 Deliberate divergences from reference bugs (SURVEY.md §8): full
 pagination always (D1/D2 — Hadoop's RemoteIterator pages internally),
 typed S3NoMatches instead of KeyError on empty prefix (D3), enumerate
-only when >1 match (D4), files-only listings (D5).
+only when >1 match (D4), files-only listings (D5).  A copy or delete
+that fails part-way raises a typed error carrying the files already
+done (:attr:`S3SparkError.completed`).
 """
 
 from __future__ import annotations
 
+import datetime
 import re
+import weakref
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -42,7 +55,13 @@ from pyspark.sql.types import (
 )
 
 from s3spark import naming
-from s3spark.errors import S3FileNotFound, S3InvalidRegex, S3NoMatches
+from s3spark.errors import (
+    S3FileNotFound,
+    S3InvalidRegex,
+    S3NoMatches,
+    S3SparkError,
+    S3TransferFailed,
+)
 
 LISTING_SCHEMA = StructType(
     [
@@ -85,24 +104,6 @@ def classify_fs_error(exc: Exception) -> Exception:
     return exc
 
 
-def _jvm_fs(spark: SparkSession, url: str):
-    """Hadoop FileSystem for a URL's scheme (file://, s3a://, ...).
-
-    Checksum sidecars (.crc) are disabled: the reference moves opaque
-    bytes 1:1; LocalFileSystem's checksum files would pollute listings.
-    Connection/auth failures surface as S3InvalidCredentials (202).
-    """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    uri = jvm.java.net.URI.create(url)
-    try:
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf)
-    except Exception as e:  # Py4JJavaError carries the JVM message
-        raise classify_fs_error(e) from e
-    _disable_checksums(fs)
-    return fs
-
-
 def _disable_checksums(fs) -> None:
     """Turn off .crc sidecars on a Hadoop FileSystem handle.
 
@@ -123,11 +124,140 @@ def _disable_checksums(fs) -> None:
             raise classified from e
 
 
-def _jpath(spark: SparkSession, url: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(url)
+def _is_not_found(exc: Exception) -> bool:
+    return isinstance(exc, Py4JJavaError) and (
+        exc.java_exception.getClass().getName() == "java.io.FileNotFoundException"
+    )
+
+
+# scheme://authority/rest → rest (S3A, hdfs, ...); scheme:/rest (no
+# authority; Hadoop renders file:/tmp/x) → /rest.  Shared by the Python
+# and Column forms of the store-relative key.
+_SCHEME_AUTHORITY = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*/"
+_SCHEME_ONLY = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(?=/)"
+_SCHEME_AUTHORITY_RE = re.compile(_SCHEME_AUTHORITY)
+_SCHEME_ONLY_RE = re.compile(_SCHEME_ONLY)
+_FS_KEY_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.\-]*):(?://([^/]*))?")
+
+
+class _Jvm:
+    """Hadoop handles for one session, resolved once.
+
+    Every ``jvm.org.apache...`` attribute chain costs one reflection
+    round trip per dotted segment, and every static-method lookup one
+    more; resolved once, a copy costs ~3 py4j calls and a delete ~2.
+    One checksum-disabled FileSystem is kept per (scheme, authority):
+    Hadoop caches the instance itself, so only the calls around it
+    are saved.
+    """
+
+    def __init__(self, spark: SparkSession) -> None:
+        jvm = spark._jvm
+        hfs = jvm.org.apache.hadoop.fs
+        util = jvm.org.apache.hadoop.util
+        self.conf = spark._jsc.hadoopConfiguration()
+        self.Path = hfs.Path
+        self.copy = hfs.FileUtil.copy
+        self.to_list = util.functional.RemoteIterators.toList
+        self.join = util.StringUtils.join
+        self.compile_regex = jvm.java.util.regex.Pattern.compile
+        self._fs: dict[tuple[str, str], object] = {}
+
+    def fs(self, url: str):
+        """FileSystem for a URL's scheme and authority (file://, s3a://,
+        ...; a bare path gets the default FileSystem).
+
+        Checksum sidecars (.crc) are disabled: the reference moves
+        opaque bytes 1:1; LocalFileSystem's checksum files would pollute
+        listings.  Connection/auth failures surface as
+        S3InvalidCredentials (202).
+        """
+        m = _FS_KEY_RE.match(url)
+        key = (m.group(1).lower(), m.group(2) or "") if m else ("", "")
+        fs = self._fs.get(key)
+        if fs is None:
+            try:
+                fs = self.Path(url).getFileSystem(self.conf)
+            except Exception as e:  # Py4JJavaError carries the JVM message
+                raise classify_fs_error(e) from e
+            _disable_checksums(fs)
+            self._fs[key] = fs
+        return fs
+
+
+_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _jvm(spark: SparkSession) -> _Jvm:
+    h = _SESSIONS.get(spark)
+    if h is None:
+        h = _SESSIONS[spark] = _Jvm(spark)
+    return h
 
 
 # ------------------------------------------------------------------- listing
+
+# Entries per py4j string: a slice of ~4k statuses is ~1 MB of text,
+# so no single transfer holds a huge prefix.
+_SLICE = 4096
+# FileStatus.toString() after its path: length, then modification_time
+# (FileStatus.java; owner and group come later and are never read).
+_STATUS_RE = re.compile(r"; length=(\d+);.*?; modification_time=(-?\d+);")
+
+
+def _list_jvm(spark: SparkSession, url: str, recursive: bool):
+    """The prefix's ``java.util.List<LocatedFileStatus>`` and its size,
+    listed inside the JVM; nothing per entry crosses py4j.  Raises
+    :class:`S3FileNotFound` (exit 201) on a missing prefix."""
+    h = _jvm(spark)
+    fs = h.fs(url)
+    try:
+        found = h.to_list(fs.listFiles(h.Path(url), recursive))
+    except Exception as e:
+        if _is_not_found(e):
+            raise S3FileNotFound(f"no such path: {url}") from e
+        raise classify_fs_error(e) from e
+    return found, found.size()
+
+
+def _fetch(spark: SparkSession, found, n: int) -> list[tuple[str, int, int]]:
+    """``(path, length, modification_ms)`` of a listed ``java.util.List``,
+    moved as NUL-joined ``FileStatus.toString()`` slices (a key cannot
+    hold NUL).  The path is cut at the LAST ``"; isDirectory="`` so a
+    key that contains that text survives."""
+    join = _jvm(spark).join
+    out = []
+    for i in range(0, n, _SLICE):
+        part = found if n <= _SLICE else found.subList(i, min(i + _SLICE, n))
+        for status in join("\0", part).split("\0"):
+            head, _, tail = status.rpartition("; isDirectory=")
+            m = _STATUS_RE.search(tail)
+            out.append((head.split("{path=", 1)[1], int(m[1]), int(m[2])))
+    return out
+
+
+def _walk(spark: SparkSession, url: str, recursive: bool) -> list[tuple[str, int, int]]:
+    """The one listing walk: ``(path, length, modification_ms)`` per file
+    under a prefix, files only (D5), fully paginated (D1/D2 — Hadoop's
+    RemoteIterator pages through S3 LIST responses)."""
+    found, n = _list_jvm(spark, url, recursive)
+    return _fetch(spark, found, n)
+
+
+def _listing_df(spark: SparkSession, entries: list[tuple[str, int, int]]) -> DataFrame:
+    rows = [
+        (
+            p,
+            naming.basename(p),
+            size,
+            # tz-aware UTC: naive datetimes would be reinterpreted in
+            # the driver's OS timezone by TimestampType.toInternal,
+            # shifting mtime on any non-UTC driver
+            datetime.datetime.fromtimestamp(mtime / 1000.0, tz=datetime.timezone.utc),
+        )
+        for p, size, mtime in entries
+    ]
+    return spark.createDataFrame(rows, LISTING_SCHEMA)
 
 
 def list_paths(
@@ -136,107 +266,39 @@ def list_paths(
     suffix: str | None = None,
     recursive: bool = True,
 ) -> list[str]:
-    """Driver-side list of file paths under a prefix via the Hadoop
-    FileSystem — the scheme-agnostic metadata walk (file://, s3a://,
-    ...) for callers that need a plain Python list (manifest diffs,
-    commit-file enumeration), not a DataFrame.
+    """Driver-side list of file paths under a prefix, for callers that
+    need a plain Python list (manifest diffs, commit-file enumeration,
+    the verbs' planning), not a DataFrame.
 
-    Replaces ad-hoc ``os.walk`` in query paths (round-12 ADVICE:
-    a local-only walk silently returns nothing on remote scratch).
-    ``suffix`` filters by file-name suffix (e.g. ``".parquet"``).
-    Raises :class:`S3FileNotFound` on a missing prefix, like
-    :func:`list_files`.  Driver-side by design: commit manifests are
-    bounded metadata (one entry per committed file), never corpus-
-    sized — huge prefixes belong on :func:`list_files_auto`.
-
-    Local prefixes (no scheme, or ``file:``) take an os.walk fast
-    path: the Hadoop RemoteIterator costs one py4j round-trip per
-    entry (measured 0.62x on the manifest-diff key — ~1 s of JVM
-    chatter to list ~90 files), which is pure overhead when the
-    driver can stat the directory directly.  Any other scheme goes
-    through the Hadoop FileSystem, so s3a:// scratch lists correctly
-    instead of silently returning nothing.
+    One :func:`_walk` for every scheme: a bare local path, ``file:`` and
+    ``s3a://`` all list through the Hadoop FileSystem, at a constant
+    number of py4j round trips.  Paths come back as Hadoop renders them
+    (``file:/tmp/x`` for a bare ``/tmp/x``).  ``suffix`` filters by
+    file-name suffix (e.g. ``".parquet"``).  Raises
+    :class:`S3FileNotFound` on a missing prefix, like :func:`list_files`.
     """
-    import os as _os
-    from urllib.parse import urlparse
-
-    scheme = urlparse(url).scheme
-    if scheme in ("", "file"):
-        root = url[len("file://"):] if url.startswith("file://") else (
-            url[len("file:"):] if url.startswith("file:") else url
-        )
-        if not _os.path.exists(root):
-            raise S3FileNotFound(f"no such path: {url}")
-        out_local: list[str] = []
-        if recursive:
-            for dirpath, _dirs, files in _os.walk(root):
-                out_local.extend(
-                    _os.path.join(dirpath, f)
-                    for f in files
-                    if suffix is None or f.endswith(suffix)
-                )
-        else:
-            out_local.extend(
-                _os.path.join(root, f)
-                for f in _os.listdir(root)
-                if _os.path.isfile(_os.path.join(root, f))
-                and (suffix is None or f.endswith(suffix))
-            )
-        return out_local
-
-    fs = _jvm_fs(spark, url)
-    path = _jpath(spark, url)
-    if not fs.exists(path):
-        raise S3FileNotFound(f"no such path: {url}")
-    out: list[str] = []
-    it = fs.listFiles(path, recursive)
-    while it.hasNext():
-        p = it.next().getPath().toString()
-        if suffix is None or p.endswith(suffix):
-            out.append(p)
-    return out
+    return [
+        p
+        for p, _size, _mtime in _walk(spark, url, recursive)
+        if suffix is None or p.endswith(suffix)
+    ]
 
 
 def list_files(spark: SparkSession, url: str, recursive: bool = True) -> DataFrame:
     """Listing DataFrame ``(path, name, size, mtime)`` for a prefix.
 
-    Driver-side metadata walk via ``FileSystem.listFiles`` — the Hadoop
-    RemoteIterator pages through S3 LIST responses internally, so >1000
-    keys are handled correctly (fixes reference bugs D1/D2). Files only
-    (D5). Raises :class:`S3FileNotFound` (exit 201) on a missing prefix,
-    matching move_file.py:100-103.
+    Driver-side metadata walk (:func:`_walk`), >1000 keys handled
+    correctly (fixes reference bugs D1/D2). Files only (D5), hidden
+    names (``_x``, ``.x``) included. Raises :class:`S3FileNotFound`
+    (exit 201) on a missing prefix, matching move_file.py:100-103.
     """
-    import datetime
-
-    fs = _jvm_fs(spark, url)
-    path = _jpath(spark, url)
-    if not fs.exists(path):
-        raise S3FileNotFound(f"no such path: {url}")
-    rows = []
-    it = fs.listFiles(path, recursive)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        rows.append(
-            (
-                p,
-                naming.basename(p),
-                st.getLen(),
-                # tz-aware UTC: naive datetimes would be reinterpreted in
-                # the driver's OS timezone by TimestampType.toInternal,
-                # shifting mtime on any non-UTC driver
-                datetime.datetime.fromtimestamp(
-                    st.getModificationTime() / 1000.0, tz=datetime.timezone.utc
-                ),
-            )
-        )
-    return spark.createDataFrame(rows, LISTING_SCHEMA)
+    return _listing_df(spark, _walk(spark, url, recursive))
 
 
-# Above this many entries the driver-side RemoteIterator walk is
-# abandoned mid-stream and the listing re-issued as a distributed scan
-# (a 100M-object prefix must never serialize through one Python loop —
-# the failure mode the reference's own pagination bug foreshadowed).
+# Above this many entries a listing DataFrame is built by a distributed
+# scan instead of a driver table.  A bound on driver memory, not a
+# speed switch: measured, the driver route's per-entry cost is the
+# lower one (PLANS.md "Driver listing threshold").
 DRIVER_LISTING_THRESHOLD = 10_000
 
 
@@ -248,38 +310,23 @@ def list_files_auto(
 ) -> DataFrame:
     """Listing DataFrame with automatic driver/distributed routing.
 
-    Walks the driver-side iterator (cheap, no job) until ``threshold``
-    entries, then cuts over to :func:`list_files_distributed` so huge
-    prefixes are listed by executor tasks instead of a driver loop.
-    The abandoned probe work is bounded by ``threshold`` entries (~10
-    S3 LIST pages at the default), independent of prefix size — the
-    distributed listing pays the full cost exactly once.  ``recursive``
-    mirrors :func:`list_files` and is honored on both routes.
-    """
-    import datetime
+    The JVM lists the prefix (:func:`_list_jvm`) and its size decides
+    the route before anything crosses py4j: up to ``threshold``
+    entries become a driver table, beyond it the listing is re-issued
+    as :func:`list_files_distributed`, so huge prefixes never
+    serialize through Python.  The driver JVM holds the full status
+    list until the route is chosen.  ``recursive`` is honored on both
+    routes.
 
-    fs = _jvm_fs(spark, url)
-    path = _jpath(spark, url)
-    if not fs.exists(path):
-        raise S3FileNotFound(f"no such path: {url}")
-    rows = []
-    it = fs.listFiles(path, recursive)
-    while it.hasNext():
-        if len(rows) >= threshold:
-            return list_files_distributed(spark, url, recursive=recursive)
-        st = it.next()
-        p = st.getPath().toString()
-        rows.append(
-            (
-                p,
-                naming.basename(p),
-                st.getLen(),
-                datetime.datetime.fromtimestamp(
-                    st.getModificationTime() / 1000.0, tz=datetime.timezone.utc
-                ),
-            )
-        )
-    return spark.createDataFrame(rows, LISTING_SCHEMA)
+    The two routes differ on hidden names: the driver route keeps
+    ``_meta.csv`` and ``.hidden.csv``, the distributed route drops
+    them (see :func:`list_files_distributed`).  The verbs do not use
+    this function and always keep them.
+    """
+    found, n = _list_jvm(spark, url, recursive)
+    if n > threshold:
+        return list_files_distributed(spark, url, recursive=recursive)
+    return _listing_df(spark, _fetch(spark, found, n))
 
 
 def list_files_distributed(
@@ -290,6 +337,10 @@ def list_files_distributed(
     ``spark.sql.sources.parallelPartitionDiscovery.threshold``) and the
     scan is executed by tasks — the 100 TB path for huge prefixes.
     Column pruning drops ``content``, so no file bytes are read.
+
+    Spark's file index skips hidden names, so this route silently
+    drops files whose name starts with ``_`` or ``.`` (``_meta.csv``,
+    ``.hidden.csv``); :func:`list_files` keeps them.
     """
     return (
         spark.read.format("binaryFile")
@@ -307,7 +358,7 @@ def list_files_distributed(
 # ------------------------------------------------------------------ matching
 
 
-def col_key_relative(path):
+def key_relative(path: str) -> str:
     """Store-relative text of a listing URL — what the reference's regex
     actually sees: the bucket-relative key on S3 (download_file.py:226
     matches ``folder/file`` keys, never ``s3://bucket/...``) or the
@@ -316,10 +367,13 @@ def col_key_relative(path):
     ``file:/tmp/x`` → ``/tmp/x``. Keeps scheme/bucket text out of the
     match so anchored patterns (``^data/``) and bucket-name overlaps
     behave exactly like the reference."""
-    # scheme://authority/rest  →  rest   (S3A, hdfs, ...)
-    rel = F.regexp_replace(path, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*/", "")
-    # scheme:/rest (no authority; Hadoop renders file:/tmp/x)  →  /rest
-    return F.regexp_replace(rel, r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(?=/)", "")
+    return _SCHEME_ONLY_RE.sub("", _SCHEME_AUTHORITY_RE.sub("", path, count=1), count=1)
+
+
+def col_key_relative(path):
+    """Column form of :func:`key_relative`."""
+    rel = F.regexp_replace(path, _SCHEME_AUTHORITY, "")
+    return F.regexp_replace(rel, _SCHEME_ONLY, "")
 
 
 def match_files(
@@ -329,16 +383,19 @@ def match_files(
 ) -> DataFrame:
     """Filter a listing like the reference matches keys (R9/R10).
 
-    ``regex_match`` is an unanchored ``re.search`` (→ ``rlike``) over
-    the store-relative key text (download_file.py:226 sees the
+    ``regex_match`` is an unanchored search (→ ``rlike``) over the
+    store-relative key text (download_file.py:226 sees the
     bucket-relative key; upload_file.py:191 the absolute local path —
     see :func:`col_key_relative`); ``exact_match`` compares the
-    full path. Raises :class:`S3InvalidRegex` (203) on a bad pattern.
+    full path. The pattern runs as a Java regex, so it is validated
+    as one: a bad pattern, or Python-only syntax such as
+    ``(?P<name>...)``, raises :class:`S3InvalidRegex` (203).  The
+    verbs match with Python ``re`` and accept the latter.
     """
     if match_type == REGEX_MATCH:
         try:
-            re.compile(pattern)
-        except re.error as e:
+            _jvm(listing.sparkSession).compile_regex(pattern)
+        except Exception as e:  # PatternSyntaxException, as PySpark raises it
             raise S3InvalidRegex(f"invalid regex {pattern!r}: {e}") from e
         return listing.filter(col_key_relative(F.col("path")).rlike(pattern))
     # exact match: Hadoop renders URIs with a scheme (file:/x, s3a://b/k);
@@ -358,24 +415,28 @@ def _collect_matches(
     source_file: str,
     match_type: str,
 ) -> list[str]:
-    """List + match + collect source paths (driver-side planning step).
+    """Matched source paths, sorted — the verbs' planning step.
 
-    The collect() here is a metadata operation over matched *paths*
-    (bounded by match count), never data rows. Listing routes through
-    :func:`list_files_auto`: small prefixes stay on the driver, huge
-    ones are listed by a distributed scan.
+    One :func:`list_paths` walk, then Python ``re.search`` over each
+    :func:`key_relative` key (the reference's matcher) and a Python
+    sort: code-point order equals Spark's UTF-8 byte order, so the
+    ``name_i`` numbering is the one a DataFrame ``orderBy`` gave.  No
+    DataFrame, no Spark job.
     """
     folder = naming.clean_folder_name(source_folder)
     base = f"{source_url.rstrip('/')}/{folder}" if folder else source_url.rstrip("/")
     if match_type == EXACT_MATCH:
         full = f"{base.rstrip('/')}/{source_file}"
-        fs = _jvm_fs(spark, full)
-        if not fs.exists(_jpath(spark, full)):
+        h = _jvm(spark)
+        if not h.fs(full).exists(h.Path(full)):
             raise S3FileNotFound(f"no such file: {full}")
         return [full]
-    listing = list_files_auto(spark, base)
-    matched = match_files(listing, source_file, REGEX_MATCH)
-    paths = [r.path for r in matched.select("path").orderBy("path").collect()]
+    listed = list_paths(spark, base)
+    try:
+        rx = re.compile(source_file)
+    except re.error as e:
+        raise S3InvalidRegex(f"invalid regex {source_file!r}: {e}") from e
+    paths = sorted(p for p in listed if rx.search(key_relative(p)))
     if not paths:
         raise S3NoMatches(
             f"no files matching {source_file!r} under {base} "
@@ -420,17 +481,85 @@ class VerbResult:
         return len(self.files)
 
 
-def _copy(spark: SparkSession, src: str, dst: str, delete_source: bool) -> None:
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    sp, dp = _jpath(spark, src), _jpath(spark, dst)
-    sfs, dfs = _jvm_fs(spark, src), _jvm_fs(spark, dst)
-    parent = dp.getParent()
-    if parent is not None and not dfs.exists(parent):
-        dfs.mkdirs(parent)  # reference makedirs, download_file.py:261-263
-    ok = jvm.org.apache.hadoop.fs.FileUtil.copy(sfs, sp, dfs, dp, delete_source, True, conf)
-    if not ok:
+# a URL with nothing but slashes after its scheme and authority
+_ROOT_RE = re.compile(r"^(?:[a-zA-Z][a-zA-Z0-9+.\-]*:)?(?://[^/]*)?/*$")
+
+
+def _copy(
+    spark: SparkSession,
+    src: str,
+    dst: str,
+    delete_source: bool,
+    made_parents: set[str],
+) -> None:
+    """One Hadoop copy (and source delete when moving).  The destination
+    parent is checked and created once per distinct parent, tracked in
+    ``made_parents`` across a verb's files."""
+    h = _jvm(spark)
+    sfs, dfs = h.fs(src), h.fs(dst)
+    parent = dst.rsplit("/", 1)[0]
+    if parent not in made_parents:
+        made_parents.add(parent)
+        if not _ROOT_RE.match(parent):
+            jparent = h.Path(parent)
+            if not dfs.exists(jparent):
+                dfs.mkdirs(jparent)  # reference makedirs, download_file.py:261-263
+    if not h.copy(sfs, h.Path(src), dfs, h.Path(dst), delete_source, True, h.conf):
         raise S3FileNotFound(f"copy failed: {src} -> {dst}")
+
+
+def _delete(spark: SparkSession, path: str) -> None:
+    h = _jvm(spark)
+    h.fs(path).delete(h.Path(path), False)
+
+
+def _verb_error(exc: Exception) -> S3SparkError:
+    """A per-file failure as a typed error: auth → 202, a vanished
+    source → 201, anything else → :class:`S3TransferFailed` (exit 1)."""
+    if isinstance(exc, S3SparkError):
+        return exc
+    classified = classify_fs_error(exc)
+    if isinstance(classified, S3SparkError):
+        return classified
+    if _is_not_found(exc):
+        return S3FileNotFound(str(exc))
+    return S3TransferFailed(str(exc))
+
+
+def _each_file(pairs: list, step) -> None:
+    """Run ``step(pair)`` per file in order.  On a failure at file k,
+    raise the typed error with ``completed`` = the k-1 pairs done and
+    ``planned`` = the number of files the verb set out to handle."""
+    for k, pair in enumerate(pairs):
+        try:
+            step(pair)
+        except Exception as e:
+            err = _verb_error(e)
+            err.completed, err.planned = tuple(pairs[:k]), len(pairs)
+            if err is e:
+                raise
+            raise err from e
+
+
+def _transfer(
+    spark: SparkSession,
+    delete_source: bool,
+    *,
+    source_url: str,
+    source_file: str,
+    source_folder: str,
+    match_type: str,
+    dest_url: str,
+    dest_folder: str,
+    dest_file: str | None,
+) -> VerbResult:
+    paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
+    pairs = _plan_destinations(paths, dest_url, dest_folder, dest_file)
+    made_parents: set[str] = set()
+    _each_file(
+        pairs, lambda p: _copy(spark, p[0], p[1], delete_source, made_parents)
+    )
+    return VerbResult(files=list(pairs))
 
 
 def ingest(
@@ -445,11 +574,17 @@ def ingest(
     dest_file: str | None = None,
 ) -> VerbResult:
     """≈ reference download (R17): remote → local byte copy per match."""
-    paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
-    pairs = _plan_destinations(paths, dest_url, dest_folder, dest_file)
-    for src, dst in pairs:
-        _copy(spark, src, dst, delete_source=False)
-    return VerbResult(files=list(pairs))
+    return _transfer(
+        spark,
+        False,
+        source_url=source_url,
+        source_file=source_file,
+        source_folder=source_folder,
+        match_type=match_type,
+        dest_url=dest_url,
+        dest_folder=dest_folder,
+        dest_file=dest_file,
+    )
 
 
 def publish(
@@ -489,12 +624,20 @@ def move(
     dest_file: str | None = None,
 ) -> VerbResult:
     """≈ reference move (R19): copy + delete per match, cross-"bucket",
-    non-atomic exactly like S3 COPY+DELETE (move_file.py:125-154)."""
-    paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
-    pairs = _plan_destinations(paths, dest_url, dest_folder, dest_file)
-    for src, dst in pairs:
-        _copy(spark, src, dst, delete_source=True)
-    return VerbResult(files=list(pairs))
+    non-atomic exactly like S3 COPY+DELETE (move_file.py:125-154).  A
+    failure at file k leaves files k..N at the source and reports
+    files 1..k-1 as ``completed``."""
+    return _transfer(
+        spark,
+        True,
+        source_url=source_url,
+        source_file=source_file,
+        source_folder=source_folder,
+        match_type=match_type,
+        dest_url=dest_url,
+        dest_folder=dest_folder,
+        dest_file=dest_file,
+    )
 
 
 def remove(
@@ -508,7 +651,6 @@ def remove(
     """≈ reference remove (R20): delete per match. Exact-match remove
     verifies existence first (divergence D7 → typed 201)."""
     paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
-    for p in paths:
-        fs = _jvm_fs(spark, p)
-        fs.delete(_jpath(spark, p), False)
-    return VerbResult(files=[(p, None) for p in paths])
+    files = [(p, None) for p in paths]
+    _each_file(files, lambda f: _delete(spark, f[0]))
+    return VerbResult(files=files)

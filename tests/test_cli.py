@@ -143,3 +143,44 @@ def test_pipeline_dataset_roundtrip(spark, tmp_path, sf_dir):
     back = pipe.read(url(tmp_path / "nation_out"))
     assert back.count() == df.count()
     assert set(back.columns) == set(df.columns)
+
+
+def test_cli_move_failure_prints_completed_prefix(
+    bucket, tmp_path, capsys, monkeypatch
+):
+    """An auth failure at file k of a move exits 202 (not a raw JVM
+    error), prints files 1..k-1 as done, and leaves k..N at the source."""
+    from s3spark import fs
+
+    real = fs._copy
+    calls = []
+
+    def flaky(*a, **kw):
+        calls.append(a[1])
+        if len(calls) == 2:
+            raise RuntimeError("AccessDenied: unable to load credentials")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(fs, "_copy", flaky)
+    dest = tmp_path / "bucket2"
+    rc = main(
+        [
+            "move",
+            "--source-bucket-name", url(bucket),
+            "--destination-bucket-name", url(dest),
+            "--source-folder-name", "data",
+            "--source-file-name-match-type", "regex_match",
+            "--source-file-name", ".",
+            "--destination-folder-name", "archive",
+        ]
+    )
+    assert rc == 202
+    captured = capsys.readouterr()
+    assert captured.out.splitlines() == [
+        f"move: 1 of 3: file:{bucket}/data/a.csv -> {url(dest)}/archive/a.csv"
+    ]
+    assert "s3spark move:" in captured.err
+    assert (dest / "archive" / "a.csv").exists()
+    assert not (bucket / "data" / "a.csv").exists()
+    assert (bucket / "data" / "b.csv").exists()
+    assert (bucket / "data" / "notes.txt").exists()

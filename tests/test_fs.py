@@ -312,10 +312,10 @@ def test_checksum_setter_exit_code_is_202():
 
 
 def test_list_paths_local_fast_path_and_suffix(spark, bucket):
-    """Round-13: list_paths replaces ad-hoc os.walk in query paths.
-    Local prefixes (bare or file:) take the os.walk fast path; the
-    suffix filter and recursion semantics must match the Hadoop
-    route's contract."""
+    """list_paths replaces ad-hoc os.walk in query paths.  Local
+    prefixes (bare or file:) list through the same Hadoop walk as any
+    other scheme; the suffix filter and recursion semantics hold for
+    both spellings."""
     root = str(bucket / "src")
     got = set(fs.list_paths(spark, root))
     assert {os.path.basename(p) for p in got} == {
@@ -340,3 +340,148 @@ def test_list_paths_missing_prefix_raises_201(spark, bucket):
     with pytest.raises(S3FileNotFound) as ei:
         fs.list_paths(spark, str(bucket / "nope"))
     assert ei.value.exit_code == 201
+
+
+def test_key_relative_agrees_with_column_form(spark):
+    """The verbs match over the Python key_relative, the listing API
+    over col_key_relative: both must strip the same scheme and
+    authority text."""
+    from pyspark.sql import functions as F
+
+    paths = [
+        "s3a://b/k",
+        "file:/x",
+        "hdfs://nn/x",
+        "s3a://prod-data-bucket/other/data/y.csv",
+        "file:///tmp/a b/ü.csv",
+        "/bare/path.csv",
+        "s3a://b",
+    ]
+    df = spark.createDataFrame([(p,) for p in paths], "path string")
+    got = [r.k for r in df.select(fs.col_key_relative(F.col("path")).alias("k")).collect()]
+    assert got == [fs.key_relative(p) for p in paths]
+    assert [fs.key_relative(p) for p in paths[:3]] == ["k", "/x", "x"]
+
+
+def test_match_files_validates_java_dialect_203(spark, bucket):
+    """match_files runs the pattern as a Java regex (rlike), so it
+    validates it as one: Python-only syntax raises S3InvalidRegex up
+    front instead of a raw JVM error from a Spark task."""
+    listing = fs.list_files(spark, url(bucket / "src"))
+    with pytest.raises(S3InvalidRegex) as ei:
+        fs.match_files(listing, r"(?P<ext>csv)$")
+    assert ei.value.exit_code == 203
+
+
+def test_verbs_accept_python_named_groups(spark, bucket, tmp_path):
+    """The verbs match with Python re, the reference's own matcher, so
+    a pattern the reference accepts works — here a named group."""
+    out = tmp_path / "out"
+    res = fs.ingest(
+        spark,
+        source_url=url(bucket),
+        source_folder="src",
+        source_file=r"data_(?P<tag>b)\.(?P<ext>csv)$",
+        match_type=fs.REGEX_MATCH,
+        dest_url=url(out),
+    )
+    assert res.count == 1
+    assert os.listdir(out) == ["data_b.csv"]
+
+
+def test_verbs_keep_hidden_names(spark, tmp_path):
+    """Keys starting with '_' or '.' are ordinary objects to the
+    reference; the verbs' driver walk keeps them.  The distributed
+    listing route (list_files_auto past its threshold) drops them, as
+    its docstring says — pinned here so the difference stays known."""
+    src = tmp_path / "hidden"
+    src.mkdir()
+    for n in ("_meta.csv", ".hidden.csv", "plain.csv"):
+        (src / n).write_text(n)
+    out = tmp_path / "out"
+    res = fs.ingest(
+        spark,
+        source_url=url(src),
+        source_file=r"\.csv$",
+        match_type=fs.REGEX_MATCH,
+        dest_url=url(out),
+    )
+    assert res.count == 3
+    assert sorted(os.listdir(out)) == [".hidden.csv", "_meta.csv", "plain.csv"]
+    driver = fs.list_files_auto(spark, url(src), threshold=3)
+    assert {r.name for r in driver.collect()} == {"_meta.csv", ".hidden.csv", "plain.csv"}
+    distributed = fs.list_files_auto(spark, url(src), threshold=2)
+    assert {r.name for r in distributed.collect()} == {"plain.csv"}
+    removed = fs.remove(
+        spark, source_url=url(src), source_file=r"\.csv$", match_type=fs.REGEX_MATCH
+    )
+    assert removed.count == 3 and os.listdir(src) == []
+
+
+def test_listing_parses_odd_key_names(spark, tmp_path):
+    """The walk parses FileStatus text: a key that contains the
+    '; isDirectory=' separator, spaces or non-ASCII keeps its exact
+    path, size and mtime."""
+    d = tmp_path / "odd"
+    (d / "a; isDirectory=true").mkdir(parents=True)
+    files = {
+        "a; isDirectory=true/k; length=9.csv": "12345",
+        "sp ace.txt": "ab",
+        "ü{path=x}.txt": "",
+    }
+    for rel, body in files.items():
+        (d / rel).write_text(body)
+    rows = fs.list_files(spark, url(d)).collect()
+    got = {r.path.split("/odd/", 1)[1]: r.size for r in rows}
+    assert got == {rel: len(body.encode()) for rel, body in files.items()}
+    for r in rows:
+        local = r.path[len("file:"):]
+        assert abs(r.mtime.timestamp() - os.path.getmtime(local)) < 1.0
+
+
+def test_move_failure_mid_verb_is_typed_with_completed_prefix(
+    spark, bucket, tmp_path, monkeypatch
+):
+    """A per-file failure is classified (auth → 202) and carries the
+    pairs already moved; files from the failing one on stay put."""
+    from s3spark.errors import S3InvalidCredentials
+
+    real = fs._copy
+    calls = []
+
+    def flaky(*a, **kw):
+        calls.append(a[1])
+        if len(calls) == 2:
+            raise RuntimeError("Status Code: 403; Error Code: AccessDenied")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(fs, "_copy", flaky)
+    with pytest.raises(S3InvalidCredentials) as ei:
+        fs.move(
+            spark,
+            source_url=url(bucket),
+            source_folder="src",
+            source_file=r"\.csv$",
+            match_type=fs.REGEX_MATCH,
+            dest_url=url(tmp_path / "dest"),
+        )
+    err = ei.value
+    assert err.exit_code == 202 and err.planned == 3
+    assert [s for s, _d in err.completed] == calls[:1]
+    assert not os.path.exists(calls[0][len("file:"):])
+    for src in calls[1:] + [f"file:{bucket}/src/data_b.csv"]:
+        assert os.path.exists(src[len("file:"):])
+
+
+def test_listing_transfers_in_slices(spark, tmp_path, monkeypatch):
+    """A listing longer than one transfer slice arrives whole, in
+    order, with the same entries as a single-slice transfer."""
+    d = tmp_path / "sliced"
+    d.mkdir()
+    for i in range(50):
+        (d / f"f{i:03d}.dat").write_text("x" * i)
+    whole = fs._walk(spark, url(d), True)
+    monkeypatch.setattr(fs, "_SLICE", 7)
+    sliced = fs._walk(spark, url(d), True)
+    assert sliced == whole and len(sliced) == 50
+    assert sorted(size for _p, size, _m in sliced) == list(range(50))

@@ -1,0 +1,129 @@
+"""Round-trip budget gate for the file verbs.
+
+The verbs plan on the driver: a listing costs a constant number of
+py4j round trips whatever its size, a copy or delete a small constant
+per file, and a regex verb starts no Spark job.  Calls are counted by
+wrapping the gateway client's ``send_command`` and keeping only the
+calling thread's commands (py4j's finalizer thread releases JVM
+references asynchronously; those releases are not part of the plan).
+"""
+
+from __future__ import annotations
+
+import threading
+from contextlib import contextmanager
+
+import pytest
+
+from s3spark import fs
+
+
+def url(p):
+    return f"file://{p}"
+
+
+@contextmanager
+def py4j_calls(spark):
+    client = spark.sparkContext._gateway._gateway_client
+    had_override = "send_command" in vars(client)
+    real = client.send_command
+    me = threading.get_ident()
+    n = [0]
+
+    def counting(*a, **kw):
+        if threading.get_ident() == me:
+            n[0] += 1
+        return real(*a, **kw)
+
+    client.send_command = counting
+    try:
+        yield n
+    finally:
+        if had_override:
+            client.send_command = real
+        else:
+            del client.send_command
+
+
+def _tree(root, n, prefix="f"):
+    root.mkdir(parents=True)
+    for i in range(n):
+        (root / f"{prefix}{i:04d}.csv").write_text("x" * (i % 7))
+    return root
+
+
+def _calls(spark, fn) -> int:
+    with py4j_calls(spark) as n:
+        fn()
+    return n[0]
+
+
+def test_listing_costs_constant_round_trips(spark, tmp_path):
+    small = _tree(tmp_path / "small", 10)
+    big = _tree(tmp_path / "big", 1000)
+    fs.list_paths(spark, url(small))  # resolve the session's JVM handles
+    c_small = _calls(spark, lambda: fs.list_paths(spark, url(small)))
+    c_big = _calls(spark, lambda: fs.list_paths(spark, url(big)))
+    assert 1 <= c_small == c_big <= 8  # served by the JVM walk, not os.walk
+    assert len(fs.list_paths(spark, url(big))) == 1000
+
+
+@pytest.mark.parametrize("verb", ["ingest", "move"])
+def test_copy_round_trips_per_file(spark, tmp_path, verb):
+    def run(n, tag):
+        src = _tree(tmp_path / f"src{tag}", n)
+        return _calls(
+            spark,
+            lambda: getattr(fs, verb)(
+                spark,
+                source_url=url(src),
+                source_file=r"\.csv$",
+                match_type=fs.REGEX_MATCH,
+                dest_url=url(tmp_path / f"dst{tag}"),
+                dest_folder="out",
+            ),
+        )
+
+    run(1, "warm")
+    per_file = (run(22, "b") - run(2, "a")) / 20
+    assert per_file <= 3
+
+
+def test_delete_round_trips_per_file(spark, tmp_path):
+    def run(n, tag):
+        src = _tree(tmp_path / f"src{tag}", n)
+        return _calls(
+            spark,
+            lambda: fs.remove(
+                spark, source_url=url(src), source_file=r"\.csv$",
+                match_type=fs.REGEX_MATCH,
+            ),
+        )
+
+    run(1, "warm")
+    per_file = (run(22, "b") - run(2, "a")) / 20
+    assert per_file <= 2
+
+
+def test_regex_verbs_start_no_spark_job(spark, tmp_path):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs() -> set:
+        bus.waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
+    src = _tree(tmp_path / "src", 6)
+    before = jobs()
+    fs.ingest(spark, source_url=url(src), source_file=r"f000[0-3]",
+              match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / "dl"))
+    fs.move(spark, source_url=url(src), source_file=r"f000[0-1]",
+            match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / "mv"),
+            dest_file="batch.csv")
+    fs.remove(spark, source_url=url(src), source_file=r"\.csv$",
+              match_type=fs.REGEX_MATCH)
+    assert jobs() == before
+    # the detector sees jobs: a DataFrame action registers one
+    spark.range(3).count()
+    assert jobs() - before
