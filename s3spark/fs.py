@@ -13,11 +13,14 @@ control surface (SURVEY.md §2.1):
 - move (copy+delete, R19 move_file.py:125-154)
 - remove (R20 remove_files.py:96-116)
 
-Design: every listing is one walk, :func:`_walk`.  The JVM lists the
-prefix with ``FileSystem.listFiles`` into a ``java.util.List`` and
-hands it to Python as a few joined strings, so a listing costs a
-constant number of py4j round trips whatever its size, and ``file://``
-in tests and ``s3a://`` in production run the same code.
+Design: every listing is one walk, :func:`_walk`.  A small JVM helper
+(compiled once per session) walks the prefix and hands it to Python in
+bounded slices of joined text, so a listing costs a constant number of
+py4j round trips per slice and neither side holds more than a slice in
+flight; ``file://`` in tests and ``s3a://`` in production run the same
+code.  The helper reads ``listFiles`` on a store and per-folder
+``listStatus`` on ``file:``, where ``listFiles`` would fork a process
+per file to load permissions nobody reads.
 
 The verbs plan on the driver: one walk, Python ``re.search`` over the
 store-relative key (the reference's own matcher, download_file.py:226),
@@ -41,6 +44,7 @@ from __future__ import annotations
 import datetime
 import re
 import weakref
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 
 from py4j.protocol import Py4JJavaError
@@ -140,6 +144,72 @@ _SCHEME_ONLY_RE = re.compile(_SCHEME_ONLY)
 _FS_KEY_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.\-]*):(?://([^/]*))?")
 
 
+# Compiled once per session with Janino (bundled with Spark for its code
+# generation).  It keeps the per-entry loop inside the JVM: py4j cannot
+# cap a RemoteIterator or read FileStatus fields without a round trip
+# per entry.
+_LISTER_JAVA = r"""
+import java.io.IOException;
+import java.util.ArrayDeque;
+import org.apache.hadoop.fs.FileStatus;
+import org.apache.hadoop.fs.FileSystem;
+import org.apache.hadoop.fs.Path;
+import org.apache.hadoop.fs.RemoteIterator;
+
+public class S3SparkLister {
+    public Walk open(FileSystem fs, Path root, boolean recursive) throws IOException {
+        return new Walk(fs, root, recursive);
+    }
+
+    /** The files under a root, handed out a bounded slice at a time. */
+    public static class Walk {
+        private final FileSystem fs;
+        private final boolean recursive;
+        private RemoteIterator files;
+        private final ArrayDeque todo = new ArrayDeque();
+
+        Walk(FileSystem fs, Path root, boolean recursive) throws IOException {
+            this.fs = fs;
+            this.recursive = recursive;
+            // listFiles builds a LocatedFileStatus per file, which reads
+            // its permissions; on file: without libhadoop that forks
+            // `ls -ld` per file.  listStatus of each folder lists the same
+            // files (checksum sidecars filtered the same way) and loads
+            // no permissions.
+            if ("file".equals(fs.getScheme())) push(fs.listStatus(root));
+            else files = fs.listFiles(root, recursive);
+        }
+
+        private void push(FileStatus[] found) {
+            for (int i = found.length - 1; i >= 0; i--) todo.push(found[i]);
+        }
+
+        private FileStatus next() throws IOException {
+            if (files != null) return files.hasNext() ? (FileStatus) files.next() : null;
+            while (!todo.isEmpty()) {
+                FileStatus s = (FileStatus) todo.pop();
+                if (!s.isDirectory()) return s;
+                if (recursive) push(fs.listStatus(s.getPath()));
+            }
+            return null;
+        }
+
+        /** Up to n more files as "path NUL length NUL mtime NUL" each. */
+        public String take(int n) throws IOException {
+            StringBuilder out = new StringBuilder();
+            for (int i = 0; i < n; i++) {
+                FileStatus s = next();
+                if (s == null) break;
+                out.append(s.getPath()).append('\0').append(s.getLen()).append('\0')
+                    .append(s.getModificationTime()).append('\0');
+            }
+            return out.toString();
+        }
+    }
+}
+"""
+
+
 class _Jvm:
     """Hadoop handles for one session, resolved once.
 
@@ -154,13 +224,14 @@ class _Jvm:
     def __init__(self, spark: SparkSession) -> None:
         jvm = spark._jvm
         hfs = jvm.org.apache.hadoop.fs
-        util = jvm.org.apache.hadoop.util
         self.conf = spark._jsc.hadoopConfiguration()
         self.Path = hfs.Path
         self.copy = hfs.FileUtil.copy
-        self.to_list = util.functional.RemoteIterators.toList
-        self.join = util.StringUtils.join
         self.compile_regex = jvm.java.util.regex.Pattern.compile
+        compiler = jvm.org.codehaus.janino.SimpleCompiler()
+        compiler.setParentClassLoader(self.conf.getClassLoader())
+        compiler.cook(_LISTER_JAVA)
+        self.lister = compiler.getClassLoader().loadClass("S3SparkLister").newInstance()
         self._fs: dict[tuple[str, str], object] = {}
 
     def fs(self, url: str):
@@ -197,54 +268,49 @@ def _jvm(spark: SparkSession) -> _Jvm:
 
 # ------------------------------------------------------------------- listing
 
-# Entries per py4j string: a slice of ~4k statuses is ~1 MB of text,
-# so no single transfer holds a huge prefix.
+# Entries per py4j string: a slice of ~4k entries is well under 1 MB of
+# text, so neither side ever holds more than one slice in flight.
 _SLICE = 4096
-# FileStatus.toString() after its path: length, then modification_time
-# (FileStatus.java; owner and group come later and are never read).
-_STATUS_RE = re.compile(r"; length=(\d+);.*?; modification_time=(-?\d+);")
 
 
-def _list_jvm(spark: SparkSession, url: str, recursive: bool):
-    """The prefix's ``java.util.List<LocatedFileStatus>`` and its size,
-    listed inside the JVM; nothing per entry crosses py4j.  Raises
-    :class:`S3FileNotFound` (exit 201) on a missing prefix."""
+def _walk(
+    spark: SparkSession, url: str, recursive: bool, limit: int | None = None
+) -> Iterator[tuple[str, int, int]]:
+    """The one listing walk: ``(path, length, modification_ms)`` per file
+    under a prefix, files only (D5), fully paginated (D1/D2 — Hadoop's
+    RemoteIterator pages through S3 LIST responses), at most ``limit``
+    entries.
+
+    The JVM walks the prefix (``_LISTER_JAVA``) and hands over
+    ``_SLICE`` entries per round trip as NUL-separated fields (a key
+    cannot hold NUL), so a listing costs a constant number of py4j
+    calls per slice and memory for one slice on the JVM side.  Raises
+    :class:`S3FileNotFound` (exit 201) on a missing prefix.
+    """
     h = _jvm(spark)
     fs = h.fs(url)
     try:
-        found = h.to_list(fs.listFiles(h.Path(url), recursive))
-    except Exception as e:
+        walk = h.lister.open(fs, h.Path(url), recursive)
+        while limit is None or limit > 0:
+            n = _SLICE if limit is None else min(_SLICE, limit)
+            fields = walk.take(n).split("\0")[:-1]
+            for i in range(0, len(fields), 3):
+                yield fields[i], int(fields[i + 1]), int(fields[i + 2])
+            got = len(fields) // 3
+            if got < n:
+                return
+            if limit is not None:
+                limit -= got
+    except Py4JJavaError as e:
         if _is_not_found(e):
             raise S3FileNotFound(f"no such path: {url}") from e
-        raise classify_fs_error(e) from e
-    return found, found.size()
+        classified = classify_fs_error(e)
+        if classified is e:
+            raise
+        raise classified from e
 
 
-def _fetch(spark: SparkSession, found, n: int) -> list[tuple[str, int, int]]:
-    """``(path, length, modification_ms)`` of a listed ``java.util.List``,
-    moved as NUL-joined ``FileStatus.toString()`` slices (a key cannot
-    hold NUL).  The path is cut at the LAST ``"; isDirectory="`` so a
-    key that contains that text survives."""
-    join = _jvm(spark).join
-    out = []
-    for i in range(0, n, _SLICE):
-        part = found if n <= _SLICE else found.subList(i, min(i + _SLICE, n))
-        for status in join("\0", part).split("\0"):
-            head, _, tail = status.rpartition("; isDirectory=")
-            m = _STATUS_RE.search(tail)
-            out.append((head.split("{path=", 1)[1], int(m[1]), int(m[2])))
-    return out
-
-
-def _walk(spark: SparkSession, url: str, recursive: bool) -> list[tuple[str, int, int]]:
-    """The one listing walk: ``(path, length, modification_ms)`` per file
-    under a prefix, files only (D5), fully paginated (D1/D2 — Hadoop's
-    RemoteIterator pages through S3 LIST responses)."""
-    found, n = _list_jvm(spark, url, recursive)
-    return _fetch(spark, found, n)
-
-
-def _listing_df(spark: SparkSession, entries: list[tuple[str, int, int]]) -> DataFrame:
+def _listing_df(spark: SparkSession, entries: Iterable[tuple[str, int, int]]) -> DataFrame:
     rows = [
         (
             p,
@@ -265,6 +331,7 @@ def list_paths(
     url: str,
     suffix: str | None = None,
     recursive: bool = True,
+    key_pattern: re.Pattern | None = None,
 ) -> list[str]:
     """Driver-side list of file paths under a prefix, for callers that
     need a plain Python list (manifest diffs, commit-file enumeration,
@@ -272,15 +339,18 @@ def list_paths(
 
     One :func:`_walk` for every scheme: a bare local path, ``file:`` and
     ``s3a://`` all list through the Hadoop FileSystem, at a constant
-    number of py4j round trips.  Paths come back as Hadoop renders them
-    (``file:/tmp/x`` for a bare ``/tmp/x``).  ``suffix`` filters by
-    file-name suffix (e.g. ``".parquet"``).  Raises
+    number of py4j round trips per slice.  Paths come back as Hadoop
+    renders them (``file:/tmp/x`` for a bare ``/tmp/x``).  ``suffix``
+    filters by file-name suffix (e.g. ``".parquet"``), ``key_pattern``
+    by ``re.search`` over the :func:`key_relative` key; both filter
+    slice by slice, so the driver holds only the kept paths.  Raises
     :class:`S3FileNotFound` on a missing prefix, like :func:`list_files`.
     """
     return [
         p
         for p, _size, _mtime in _walk(spark, url, recursive)
-        if suffix is None or p.endswith(suffix)
+        if (suffix is None or p.endswith(suffix))
+        and (key_pattern is None or key_pattern.search(key_relative(p)))
     ]
 
 
@@ -296,9 +366,9 @@ def list_files(spark: SparkSession, url: str, recursive: bool = True) -> DataFra
 
 
 # Above this many entries a listing DataFrame is built by a distributed
-# scan instead of a driver table.  A bound on driver memory, not a
-# speed switch: measured, the driver route's per-entry cost is the
-# lower one (PLANS.md "Driver listing threshold").
+# scan instead of a driver table.  A bound on driver memory and on the
+# probe's LIST work, not a speed switch: measured, the driver route's
+# per-entry cost is the lower one (PLANS.md "Driver listing threshold").
 DRIVER_LISTING_THRESHOLD = 10_000
 
 
@@ -310,23 +380,22 @@ def list_files_auto(
 ) -> DataFrame:
     """Listing DataFrame with automatic driver/distributed routing.
 
-    The JVM lists the prefix (:func:`_list_jvm`) and its size decides
-    the route before anything crosses py4j: up to ``threshold``
-    entries become a driver table, beyond it the listing is re-issued
-    as :func:`list_files_distributed`, so huge prefixes never
-    serialize through Python.  The driver JVM holds the full status
-    list until the route is chosen.  ``recursive`` is honored on both
-    routes.
+    A probe walk (:func:`_walk`) stops after ``threshold + 1``
+    entries: a prefix that fits becomes a driver table, a longer one is
+    re-listed by :func:`list_files_distributed`.  Whatever the prefix
+    size, the probe holds at most ``threshold + 1`` entries on the
+    driver and reads only the LIST pages that hold them (~10 S3 pages
+    at the default).  ``recursive`` is honored on both routes.
 
     The two routes differ on hidden names: the driver route keeps
     ``_meta.csv`` and ``.hidden.csv``, the distributed route drops
     them (see :func:`list_files_distributed`).  The verbs do not use
     this function and always keep them.
     """
-    found, n = _list_jvm(spark, url, recursive)
-    if n > threshold:
+    entries = list(_walk(spark, url, recursive, limit=threshold + 1))
+    if len(entries) > threshold:
         return list_files_distributed(spark, url, recursive=recursive)
-    return _listing_df(spark, _fetch(spark, found, n))
+    return _listing_df(spark, entries)
 
 
 def list_files_distributed(
@@ -417,11 +486,12 @@ def _collect_matches(
 ) -> list[str]:
     """Matched source paths, sorted — the verbs' planning step.
 
-    One :func:`list_paths` walk, then Python ``re.search`` over each
-    :func:`key_relative` key (the reference's matcher) and a Python
-    sort: code-point order equals Spark's UTF-8 byte order, so the
-    ``name_i`` numbering is the one a DataFrame ``orderBy`` gave.  No
-    DataFrame, no Spark job.
+    One :func:`list_paths` walk filtered by Python ``re.search`` over
+    each :func:`key_relative` key (the reference's matcher), so the
+    driver holds the matches, not the prefix; then a Python sort:
+    code-point order equals Spark's UTF-8 byte order, so the ``name_i``
+    numbering is the one a DataFrame ``orderBy`` gave.  No DataFrame,
+    no Spark job.
     """
     folder = naming.clean_folder_name(source_folder)
     base = f"{source_url.rstrip('/')}/{folder}" if folder else source_url.rstrip("/")
@@ -431,12 +501,11 @@ def _collect_matches(
         if not h.fs(full).exists(h.Path(full)):
             raise S3FileNotFound(f"no such file: {full}")
         return [full]
-    listed = list_paths(spark, base)
     try:
         rx = re.compile(source_file)
     except re.error as e:
         raise S3InvalidRegex(f"invalid regex {source_file!r}: {e}") from e
-    paths = sorted(p for p in listed if rx.search(key_relative(p)))
+    paths = sorted(list_paths(spark, base, key_pattern=rx))
     if not paths:
         raise S3NoMatches(
             f"no files matching {source_file!r} under {base} "
@@ -541,27 +610,6 @@ def _each_file(pairs: list, step) -> None:
             raise err from e
 
 
-def _transfer(
-    spark: SparkSession,
-    delete_source: bool,
-    *,
-    source_url: str,
-    source_file: str,
-    source_folder: str,
-    match_type: str,
-    dest_url: str,
-    dest_folder: str,
-    dest_file: str | None,
-) -> VerbResult:
-    paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
-    pairs = _plan_destinations(paths, dest_url, dest_folder, dest_file)
-    made_parents: set[str] = set()
-    _each_file(
-        pairs, lambda p: _copy(spark, p[0], p[1], delete_source, made_parents)
-    )
-    return VerbResult(files=list(pairs))
-
-
 def ingest(
     spark: SparkSession,
     *,
@@ -574,17 +622,11 @@ def ingest(
     dest_file: str | None = None,
 ) -> VerbResult:
     """≈ reference download (R17): remote → local byte copy per match."""
-    return _transfer(
-        spark,
-        False,
-        source_url=source_url,
-        source_file=source_file,
-        source_folder=source_folder,
-        match_type=match_type,
-        dest_url=dest_url,
-        dest_folder=dest_folder,
-        dest_file=dest_file,
-    )
+    paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
+    pairs = _plan_destinations(paths, dest_url, dest_folder, dest_file)
+    made: set[str] = set()
+    _each_file(pairs, lambda p: _copy(spark, p[0], p[1], False, made))
+    return VerbResult(files=list(pairs))
 
 
 def publish(
@@ -627,17 +669,11 @@ def move(
     non-atomic exactly like S3 COPY+DELETE (move_file.py:125-154).  A
     failure at file k leaves files k..N at the source and reports
     files 1..k-1 as ``completed``."""
-    return _transfer(
-        spark,
-        True,
-        source_url=source_url,
-        source_file=source_file,
-        source_folder=source_folder,
-        match_type=match_type,
-        dest_url=dest_url,
-        dest_folder=dest_folder,
-        dest_file=dest_file,
-    )
+    paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
+    pairs = _plan_destinations(paths, dest_url, dest_folder, dest_file)
+    made: set[str] = set()
+    _each_file(pairs, lambda p: _copy(spark, p[0], p[1], True, made))
+    return VerbResult(files=list(pairs))
 
 
 def remove(

@@ -419,9 +419,9 @@ def test_verbs_keep_hidden_names(spark, tmp_path):
 
 
 def test_listing_parses_odd_key_names(spark, tmp_path):
-    """The walk parses FileStatus text: a key that contains the
-    '; isDirectory=' separator, spaces or non-ASCII keeps its exact
-    path, size and mtime."""
+    """A key that contains FileStatus field text ('; isDirectory=',
+    '{path='), spaces or non-ASCII keeps its exact path, size and mtime
+    through the walk's text transfer."""
     d = tmp_path / "odd"
     (d / "a; isDirectory=true").mkdir(parents=True)
     files = {
@@ -480,8 +480,80 @@ def test_listing_transfers_in_slices(spark, tmp_path, monkeypatch):
     d.mkdir()
     for i in range(50):
         (d / f"f{i:03d}.dat").write_text("x" * i)
-    whole = fs._walk(spark, url(d), True)
+    whole = list(fs._walk(spark, url(d), True))
     monkeypatch.setattr(fs, "_SLICE", 7)
-    sliced = fs._walk(spark, url(d), True)
+    sliced = list(fs._walk(spark, url(d), True))
     assert sliced == whole and len(sliced) == 50
     assert sorted(size for _p, size, _m in sliced) == list(range(50))
+    assert len(list(fs._walk(spark, url(d), True, limit=10))) == 10
+
+
+def test_listing_auto_probe_stops_at_threshold(spark, tmp_path, monkeypatch):
+    """Past the threshold, list_files_auto never holds the whole prefix:
+    the JVM hands over at most threshold + 1 entries before the
+    listing is re-issued as a distributed scan."""
+    d = tmp_path / "many"
+    d.mkdir()
+    for i in range(300):
+        (d / f"f{i:03d}.dat").write_text("x")
+    handed = []
+
+    class CountingWalk:
+        def __init__(self, walk):
+            self.walk = walk
+
+        def take(self, n):
+            text = self.walk.take(n)
+            handed.append(text.count("\0") // 3)
+            return text
+
+    class CountingLister:
+        def __init__(self, lister):
+            self.lister = lister
+
+        def open(self, *a):
+            return CountingWalk(self.lister.open(*a))
+
+    h = fs._jvm(spark)
+    monkeypatch.setattr(h, "lister", CountingLister(h.lister))
+    monkeypatch.setattr(fs, "_SLICE", 16)
+    big = fs.list_files_auto(spark, url(d), threshold=40)
+    assert "binaryFile" in big._jdf.queryExecution().executedPlan().toString()
+    assert sum(handed) == 41 and max(handed) <= 16
+    assert big.count() == 300
+    handed.clear()
+    small = fs.list_files_auto(spark, url(d), threshold=300)
+    assert small.count() == 300 and sum(handed) == 300
+
+
+def test_local_walk_lists_what_listfiles_lists(spark, tmp_path):
+    """On file: the walk reads per-folder listStatus instead of
+    listFiles (which forks a process per file for permissions); both
+    must yield the same files: nested folders, hidden names, empty
+    folders skipped, checksum sidecars filtered, recursion honored."""
+    d = tmp_path / "tree"
+    (d / "a" / "b").mkdir(parents=True)
+    (d / "empty").mkdir()
+    for rel, body in {
+        "top.csv": "1",
+        "_meta.csv": "22",
+        "a/.hidden.csv": "333",
+        "a/b/deep.csv": "4444",
+        "a/b/.deep.csv.crc": "crc",
+    }.items():
+        (d / rel).write_text(body)
+    h = fs._jvm(spark)
+    for recursive in (True, False):
+        it = h.fs(url(d)).listFiles(h.Path(url(d)), recursive)
+        want = []
+        while it.hasNext():
+            st = it.next()
+            want.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+        got = list(fs._walk(spark, url(d), recursive))
+        assert sorted(got) == sorted(want)
+    assert {p.rsplit("/", 1)[1] for p, _s, _m in fs._walk(spark, url(d), True)} == {
+        "top.csv", "_meta.csv", ".hidden.csv", "deep.csv",
+    }
+    # a single file lists as itself, like listFiles
+    one = list(fs._walk(spark, url(d / "top.csv"), True))
+    assert [(p.rsplit("/", 1)[1], s) for p, s, _m in one] == [("top.csv", 1)]
