@@ -504,6 +504,9 @@ def _collect_matches(
     try:
         rx = re.compile(source_file)
     except re.error as e:
+        # the reference lists before it matches: a missing prefix (201)
+        # is reported ahead of a bad pattern
+        next(_walk(spark, base, True, limit=1), None)
         raise S3InvalidRegex(f"invalid regex {source_file!r}: {e}") from e
     paths = sorted(list_paths(spark, base, key_pattern=rx))
     if not paths:

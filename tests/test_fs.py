@@ -107,6 +107,20 @@ def test_match_invalid_regex_raises_203(spark, bucket):
     assert ei.value.exit_code == 203
 
 
+def test_verb_bad_regex_is_203_after_a_missing_prefix_201(spark, bucket, tmp_path):
+    """The verbs list before they match, like the reference: a bad
+    pattern raises 203, but on a missing prefix 201 comes first."""
+    def ingest(folder):
+        fs.ingest(spark, source_url=url(bucket), source_folder=folder,
+                  source_file="[unclosed", match_type=fs.REGEX_MATCH,
+                  dest_url=url(tmp_path / "out"))
+
+    with pytest.raises(S3InvalidRegex):
+        ingest("src")
+    with pytest.raises(S3FileNotFound):
+        ingest("nope")
+
+
 def test_ingest_exact_match(spark, bucket, tmp_path):
     out = tmp_path / "out"
     res = fs.ingest(
