@@ -29,7 +29,11 @@ handles resolved once per session (:class:`_Jvm`).  They start no
 Spark job.  The *matched-file set as a DataFrame* (SURVEY.md §3.2)
 is the listing API's design: :func:`list_files`,
 :func:`list_files_auto` (driver table, or a distributed ``binaryFile``
-scan past a threshold) and :func:`match_files`.
+scan past a threshold) and :func:`match_files`.  The driver table is a
+JVM ``LocalRelation`` built by the same helper in one py4j call
+(:func:`local_table`): Catalyst folds the match filter and a
+``select`` into a ``LocalTableScan``, so listing, matching and
+collecting the paths start no Spark job and no Python worker.
 
 Deliberate divergences from reference bugs (SURVEY.md §8): full
 pagination always (D1/D2 — Hadoop's RemoteIterator pages internally),
@@ -41,7 +45,6 @@ done (:attr:`S3SparkError.completed`).
 
 from __future__ import annotations
 
-import datetime
 import re
 import weakref
 from collections.abc import Iterable, Iterator
@@ -145,20 +148,57 @@ _FS_KEY_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.\-]*):(?://([^/]*))?")
 
 
 # Compiled once per session with Janino (bundled with Spark for its code
-# generation).  It keeps the per-entry loop inside the JVM: py4j cannot
-# cap a RemoteIterator or read FileStatus fields without a round trip
-# per entry.
+# generation).  It keeps the per-entry loops inside the JVM: py4j cannot
+# cap a RemoteIterator, read FileStatus fields or build a Row without a
+# round trip per entry.
 _LISTER_JAVA = r"""
 import java.io.IOException;
+import java.time.Instant;
 import java.util.ArrayDeque;
+import java.util.ArrayList;
 import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.FileSystem;
 import org.apache.hadoop.fs.Path;
 import org.apache.hadoop.fs.RemoteIterator;
+import org.apache.spark.sql.Dataset;
+import org.apache.spark.sql.RowFactory;
+import org.apache.spark.sql.SparkSession;
+import org.apache.spark.sql.types.DataType;
+import org.apache.spark.sql.types.LongType;
+import org.apache.spark.sql.types.StructType;
+import org.apache.spark.sql.types.TimestampType;
 
 public class S3SparkLister {
     public Walk open(FileSystem fs, Path root, boolean recursive) throws IOException {
         return new Walk(fs, root, recursive);
+    }
+
+    /**
+     * A LocalRelation over rows given as NUL-terminated fields, row after
+     * row, each parsed by its schema type: StringType as is, LongType as a
+     * decimal, TimestampType as epoch milliseconds.
+     */
+    public Dataset table(SparkSession spark, StructType schema, String text) {
+        DataType[] types = new DataType[schema.length()];
+        for (int j = 0; j < types.length; j++) types[j] = schema.fields()[j].dataType();
+        ArrayList rows = new ArrayList();
+        Object[] row = new Object[types.length];
+        int j = 0;
+        int at = 0;
+        for (int end = text.indexOf('\0'); end >= 0; end = text.indexOf('\0', at)) {
+            String field = text.substring(at, end);
+            at = end + 1;
+            if (types[j] instanceof LongType) row[j] = Long.valueOf(field);
+            else if (types[j] instanceof TimestampType) row[j] = Instant.ofEpochMilli(Long.parseLong(field));
+            else row[j] = field;
+            if (++j == types.length) {
+                rows.add(RowFactory.create(row));
+                row = new Object[types.length];
+                j = 0;
+            }
+        }
+        if (j != 0) throw new IllegalArgumentException("text ends inside a row");
+        return spark.createDataFrame(rows, schema);
     }
 
     /** The files under a root, handed out a bounded slice at a time. */
@@ -232,6 +272,7 @@ class _Jvm:
         compiler.setParentClassLoader(self.conf.getClassLoader())
         compiler.cook(_LISTER_JAVA)
         self.lister = compiler.getClassLoader().loadClass("S3SparkLister").newInstance()
+        self.table = self.lister.table
         self._fs: dict[tuple[str, str], object] = {}
 
     def fs(self, url: str):
@@ -310,20 +351,32 @@ def _walk(
         raise classified from e
 
 
+def local_table(spark: SparkSession, rows: Iterable[tuple], schema: StructType) -> DataFrame:
+    """A DataFrame over rows the driver holds, built in the JVM as a
+    ``LocalRelation`` by one py4j call.
+
+    ``spark.createDataFrame`` on a Python list builds a pickled RDD that
+    Python workers re-serialize, so even a filter and collect over a
+    few rows start a job.  Over a ``LocalRelation``, Catalyst folds
+    projections and filters into a ``LocalTableScan`` that collects on
+    the driver with no job; a plan it cannot fold (a sort, a broadcast)
+    runs its tasks without a Python worker.  Fields are
+    ``StringType``, ``LongType`` or ``TimestampType`` (given as epoch
+    milliseconds, an instant, so no timezone applies), never null, and
+    hold no NUL character: the rows cross py4j as NUL-terminated text.
+    """
+    text = "".join(f"{v}\0" for row in rows for v in row)
+    jspark = spark._jsparkSession
+    jdf = _jvm(spark).table(jspark, jspark.parseDataType(schema.json()), text)
+    return DataFrame(jdf, spark)
+
+
 def _listing_df(spark: SparkSession, entries: Iterable[tuple[str, int, int]]) -> DataFrame:
-    rows = [
-        (
-            p,
-            naming.basename(p),
-            size,
-            # tz-aware UTC: naive datetimes would be reinterpreted in
-            # the driver's OS timezone by TimestampType.toInternal,
-            # shifting mtime on any non-UTC driver
-            datetime.datetime.fromtimestamp(mtime / 1000.0, tz=datetime.timezone.utc),
-        )
-        for p, size, mtime in entries
-    ]
-    return spark.createDataFrame(rows, LISTING_SCHEMA)
+    return local_table(
+        spark,
+        ((p, naming.basename(p), size, mtime) for p, size, mtime in entries),
+        LISTING_SCHEMA,
+    )
 
 
 def list_paths(
@@ -357,7 +410,8 @@ def list_paths(
 def list_files(spark: SparkSession, url: str, recursive: bool = True) -> DataFrame:
     """Listing DataFrame ``(path, name, size, mtime)`` for a prefix.
 
-    Driver-side metadata walk (:func:`_walk`), >1000 keys handled
+    Driver-side metadata walk (:func:`_walk`) into a JVM
+    ``LocalRelation`` (:func:`local_table`), >1000 keys handled
     correctly (fixes reference bugs D1/D2). Files only (D5), hidden
     names (``_x``, ``.x``) included. Raises :class:`S3FileNotFound`
     (exit 201) on a missing prefix, matching move_file.py:100-103.
@@ -381,7 +435,9 @@ def list_files_auto(
     """Listing DataFrame with automatic driver/distributed routing.
 
     A probe walk (:func:`_walk`) stops after ``threshold + 1``
-    entries: a prefix that fits becomes a driver table, a longer one is
+    entries: a prefix that fits becomes a driver table, a JVM
+    ``LocalRelation`` (:func:`local_table`) whose filter, select and
+    collect start no Spark job and no Python worker; a longer one is
     re-listed by :func:`list_files_distributed`.  Whatever the prefix
     size, the probe holds at most ``threshold + 1`` entries on the
     driver and reads only the LIST pages that hold them (~10 S3 pages

@@ -14,7 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from s3spark.fs import local_table
 from s3spark.io import table
 from s3spark.queries._prefix import explode_shingles as _explode_shingles
 from s3spark.registry import register
@@ -860,6 +862,11 @@ def text_token_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EDGE_DRIVER_CAP = 2_000_000
 
+_DROP_SCHEMA = StructType([StructField("doc_id", LongType())])
+_LABEL_SCHEMA = StructType(
+    [StructField("doc_id", LongType()), StructField("cluster_id", LongType())]
+)
+
 _CLUSTER_SQL = (
     _TRIGRAM_SQL.replace("ORDER BY doc_a, doc_b", "")
     .strip()
@@ -945,20 +952,19 @@ def apply_drop_list(
 
     Small lists become one in-set scan predicate (null guard mirrors
     the anti-join's null-keeping semantics).  Larger lists go back out
-    as a LocalRelation broadcast ANTI join: a multi-thousand-literal
-    ``In`` blows up plan analysis — the round-13 10x-docs core panel
-    measured dedup_minhash_survivors at **76 s** with a 48k-literal
-    predicate vs seconds as an anti-join, which is why the ceiling is
-    deliberately low."""
+    as a LocalRelation (:func:`s3spark.fs.local_table`, built in the
+    JVM, so no Python worker serves it) broadcast ANTI join: a
+    multi-thousand-literal ``In`` blows up plan analysis — the round-13
+    10x-docs core panel measured dedup_minhash_survivors at **76 s**
+    with a 48k-literal predicate vs seconds as an anti-join, which is
+    why the ceiling is deliberately low."""
     if not drops:
         return df
     if len(drops) <= _DROP_LITERAL_CAP:
         return df.filter(
             ~F.col("doc_id").isin(drops) | F.col("doc_id").isNull()
         )
-    drops_df = spark.createDataFrame(
-        [(int(x),) for x in drops], "doc_id long"
-    )
+    drops_df = local_table(spark, ((int(x),) for x in drops), _DROP_SCHEMA)
     return df.join(F.broadcast(drops_df), "doc_id", "left_anti")
 
 
@@ -991,9 +997,7 @@ def cluster_labels(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     if len(edge_rows) <= _EDGE_DRIVER_CAP:
         roots = _driver_union_find(edge_rows)
         labels = sorted(roots.items())
-        return spark.createDataFrame(
-            labels, "doc_id long, cluster_id long"
-        ).orderBy("doc_id")
+        return local_table(spark, labels, _LABEL_SCHEMA).orderBy("doc_id")
 
     edges = pairs.select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")

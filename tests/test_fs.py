@@ -453,6 +453,40 @@ def test_listing_parses_odd_key_names(spark, tmp_path):
         assert abs(r.mtime.timestamp() - os.path.getmtime(local)) < 1.0
 
 
+@pytest.mark.parametrize("java8_api", ["false", "true"])
+def test_listing_table_keeps_the_walks_rows(spark, tmp_path, java8_api):
+    """The driver listing table holds exactly the walk's entries as
+    (path, naming.basename(path), size, UTC mtime): odd key names and
+    hidden names survive the JVM table's text transfer, on a session
+    with or without java.time timestamps."""
+    from datetime import datetime, timezone
+
+    from s3spark import naming
+
+    d = tmp_path / "odd"
+    d.mkdir()
+    names = ["sp ace.csv", "100%.csv", "t\tab.csv", "new\nline.csv",
+             "ünï·cødé.csv", "_meta.csv", ".hidden.csv"]
+    for i, n in enumerate(names):
+        (d / n).write_text("x" * i)
+    key = "spark.sql.datetime.java8API.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, java8_api)
+    try:
+        df = fs.list_files(spark, url(d))
+        rows = df.collect()
+    finally:
+        spark.conf.set(key, old)
+    assert df.schema == fs.LISTING_SCHEMA
+    want = {
+        (p, naming.basename(p), size, datetime.fromtimestamp(ms / 1000, tz=timezone.utc))
+        for p, size, ms in fs._walk(spark, url(d), True)
+    }
+    got = {(r.path, r.name, r.size, r.mtime.astimezone(timezone.utc)) for r in rows}
+    assert got == want and len(rows) == len(names)
+    assert sorted(r.name for r in rows) == sorted(names)
+
+
 def test_move_failure_mid_verb_is_typed_with_completed_prefix(
     spark, bucket, tmp_path, monkeypatch
 ):

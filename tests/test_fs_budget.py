@@ -1,8 +1,11 @@
-"""Round-trip budget gate for the file verbs.
+"""Round-trip budget gate for the file verbs and the listing table.
 
 The verbs plan on the driver: a listing costs a constant number of
 py4j round trips whatever its size, a copy or delete a small constant
-per file, and a regex verb starts no Spark job.  Calls are counted by
+per file, and a regex verb starts no Spark job.  The listing
+DataFrame is a JVM LocalRelation: building it costs a constant number
+of round trips too, and listing, matching and collecting its paths
+start no Spark job.  Calls are counted by
 wrapping the gateway client's ``send_command`` and keeping only the
 calling thread's commands (py4j's finalizer thread releases JVM
 references asynchronously; those releases are not part of the plan).
@@ -105,17 +108,16 @@ def test_delete_round_trips_per_file(spark, tmp_path):
     assert per_file <= 2
 
 
-def test_regex_verbs_start_no_spark_job(spark, tmp_path):
+def _jobs(spark) -> set:
+    """Ids of every job the session has started so far."""
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    bus = sc._jsc.sc().listenerBus()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
 
-    def jobs() -> set:
-        bus.waitUntilEmpty()
-        return set(tracker.getJobIdsForGroup(None))
 
+def test_regex_verbs_start_no_spark_job(spark, tmp_path):
     src = _tree(tmp_path / "src", 6)
-    before = jobs()
+    before = _jobs(spark)
     fs.ingest(spark, source_url=url(src), source_file=r"f000[0-3]",
               match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / "dl"))
     fs.move(spark, source_url=url(src), source_file=r"f000[0-1]",
@@ -123,7 +125,28 @@ def test_regex_verbs_start_no_spark_job(spark, tmp_path):
             dest_file="batch.csv")
     fs.remove(spark, source_url=url(src), source_file=r"\.csv$",
               match_type=fs.REGEX_MATCH)
-    assert jobs() == before
+    assert _jobs(spark) == before
     # the detector sees jobs: a DataFrame action registers one
     spark.range(3).count()
-    assert jobs() - before
+    assert _jobs(spark) - before
+
+
+def test_listing_table_costs_constant_round_trips(spark, tmp_path):
+    small = _tree(tmp_path / "small", 10)
+    big = _tree(tmp_path / "big", 1000)
+    fs.list_files(spark, url(small))  # resolve the session's JVM handles
+    for listing in (fs.list_files, fs.list_files_auto):
+        c_small = _calls(spark, lambda: listing(spark, url(small)))
+        c_big = _calls(spark, lambda: listing(spark, url(big)))
+        assert 1 <= c_small == c_big <= 8
+
+
+def test_listing_table_and_match_start_no_spark_job(spark, tmp_path):
+    src = _tree(tmp_path / "src", 12)
+    before = _jobs(spark)
+    for listing in (fs.list_files, fs.list_files_auto):
+        df = listing(spark, url(src))
+        assert len(df.collect()) == 12
+        got = fs.match_files(df, r"f000[0-4]\.csv$").select("path").collect()
+        assert len(got) == 5
+    assert _jobs(spark) == before

@@ -462,7 +462,8 @@ def test_apply_drop_list_large_list_uses_anti_join(spark):
     big = list(range(0, 4000, 2))  # 2000 > _DROP_LITERAL_CAP
     assert len(big) > _DROP_LITERAL_CAP
     out = apply_drop_list(spark, df, big)
-    assert "Join LeftAnti" in out._jdf.queryExecution().optimizedPlan().toString()
+    plan_big = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join LeftAnti" in plan_big and "LocalRelation" in plan_big
     small = list(range(0, 40, 2))
     out_small = apply_drop_list(spark, df, small)
     plan_small = out_small._jdf.queryExecution().optimizedPlan().toString()
