@@ -13,10 +13,11 @@ Reproduces the behavioral contract of the reference's naming helpers
   (explicit name wins and is enumerated when a file_number is given;
   otherwise the source basename is used unmodified)
 
-Each helper exists twice: a plain-Python form (driver-side planning of
-file verbs) and a Spark ``Column`` form (distributed projection over a
-listing DataFrame — the 100 TB path where per-file Python loops would
-serialize on the driver).
+The file verbs plan on the driver with the plain-Python forms.  Two
+helpers also have a Spark ``Column`` form for projections over a
+listing DataFrame: ``col_basename`` (the ``name`` column of the
+distributed listing) and ``col_enumerate_name`` (the
+``project_rename_enumerate`` query key).
 
 Divergence D4 (SURVEY.md §8): enumeration applies only when >1 file
 matched, standardizing the upload/move behavior.
@@ -113,17 +114,3 @@ def col_enumerate_name(name: Column, n: Column) -> Column:
     )
     without_dot = F.concat(name, F.lit("_"), n.cast("string"))
     return F.when(pos > 0, with_dot).otherwise(without_dot)
-
-
-def col_destination_name(
-    path: Column,
-    dest_file_name: str | None,
-    n: Column,
-    n_matches: Column,
-) -> Column:
-    """Column form of :func:`destination_file_name` with divergence D4:
-    enumerate the explicit name only when more than one file matched."""
-    if not dest_file_name:
-        return col_basename(path)
-    lit = F.lit(dest_file_name)
-    return F.when(n_matches > 1, col_enumerate_name(lit, n)).otherwise(lit)

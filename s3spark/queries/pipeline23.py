@@ -380,9 +380,9 @@ def dq_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     all six, never six jobs); pass 2 is a plain single-level
     aggregate for rows/nulls/min/max with NO Expand.  The previous
     single-scan form fanned the 13 plain aggregates through the x7
-    Expand too — scripts/profile_cost_check.py measured that at
-    4.11 s vs 1.58 s for this split at sf0.1 (4.43 vs 3.10 at 10x
-    orders; PLANS.md), so the second scan is cheaper than hauling
+    Expand too — a round-11 A/B measured that at 4.11 s vs 1.58 s
+    for this split at sf0.1 (4.43 vs 3.10 at 10x orders; PLANS.md
+    "Round-11 additions"), so the second scan is cheaper than hauling
     every plain aggregate through the fan-out at every scale tested.
     The two 1-row aggregates broadcast-join and stack() fans the
     per-column report AFTER the reductions (plan-gated: exactly two

@@ -102,7 +102,8 @@ def dedup_substring_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Engine shape (100 TB): shingle hashing is pure map-side (md5 over
     the 50-token window — the md5-portability trick from
     dedup_fuzzy_minhash; a Karp-Rabin integer fold was A/B-measured in
-    scripts/kr_shingle_ab.py and LOST 0.84x/0.6x — Spark interprets
+    round 12 (OPTIMIZATION_r12.md item 5, PLANS.md "Round-11
+    additions") and LOST 0.84x/0.6x — Spark interprets
     HOF lambdas per element while md5/concat_ws run in whole-stage
     codegen, so md5 stays); duplicate marking is ONE content-hash
     shuffle (count window over h — boilerplate-skewed hashes are

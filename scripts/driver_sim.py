@@ -4,9 +4,6 @@ list-valued output cells fail here EXACTLY as they fail the driver's
 canonicalizer; see CORRECTNESS_r04 embedding_centroids err).
 
 Usage:
-    python scripts/driver_sim.py               # the expected next
-                                               # driver window (first
-                                               # 50 post-rotation keys)
     python scripts/driver_sim.py --all         # whole registry
     python scripts/driver_sim.py key1 key2 ... # named keys
 """
@@ -23,15 +20,11 @@ import s3spark.queries  # noqa: F401
 from s3spark.registry import REGISTRY
 from tests.helpers import assert_same  # the driver-faithful comparator
 
-WINDOW = 50  # the driver verifies ~50 keys per round, registration order
-
 argv = sys.argv[1:]
-if argv == ["--all"]:
-    KEYS = list(REGISTRY)
-elif argv:
-    KEYS = argv
-else:
-    KEYS = list(REGISTRY)[:WINDOW]
+if not argv:
+    print(__doc__, file=sys.stderr)
+    sys.exit(2)
+KEYS = list(REGISTRY) if argv == ["--all"] else argv
 
 # S3SPARK_SIM_SF_DIR: sweep the fixture scale (the differential must
 # hold at EVERY SF, not just the driver's 0.01 — a threshold tuned to

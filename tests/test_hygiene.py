@@ -7,13 +7,18 @@
 2. Bench integrity — BENCH_DETAIL.json (written by every bench.py run)
    must record zero failed keys and cover the whole registry, so a
    silently failing key can never ship inside a green round.
+3. Importing the query package reads no run record and registers
+   keys in plain module order.
 """
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import re
+import subprocess
+import sys
 
 import s3spark.queries  # noqa: F401  (fills REGISTRY)
 from s3spark.registry import REGISTRY
@@ -62,6 +67,82 @@ def test_bench_detail_integrity():
         f"{len(missing)} registered keys absent from BENCH_DETAIL.json "
         f"(stale detail — re-run `python bench.py`): {sorted(missing)[:10]}"
     )
+
+
+_IMPORT_PROBE = """
+import json, os, sys
+opened = []
+def hook(event, args):
+    if event == "open" and isinstance(args[0], (str, bytes, os.PathLike)):
+        opened.append(os.path.realpath(os.fsdecode(args[0])))
+sys.addaudithook(hook)
+import s3spark.queries
+from s3spark.registry import REGISTRY
+print(json.dumps({
+    "opened": opened,
+    "modules": [q.fn.__module__ for q in REGISTRY.values()],
+}))
+"""
+
+
+def _query_imports(name: str) -> list:
+    """Sibling query modules that ``s3spark/queries/<name>.py`` (or the
+    package's ``__init__.py``) imports at top level, in source order."""
+    path = os.path.join(_PKG, "queries", f"{name}.py")
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    found = []
+    for node in tree.body:
+        if not isinstance(node, ast.ImportFrom):
+            continue
+        if node.module == "s3spark.queries":
+            found.extend(alias.name for alias in node.names)
+        elif (node.module or "").startswith("s3spark.queries."):
+            found.append(node.module.rsplit(".", 1)[1])
+    return found
+
+
+def test_query_import_reads_no_run_record_and_keeps_module_order():
+    """``import s3spark.queries`` opens no file at the repo root (the
+    ``CORRECTNESS_r*.json`` run records included), and the registry
+    lists keys in the order Python runs the modules: the package's
+    import list, with a sibling module that another imports at top
+    level (``llm`` from ``curation2``) registered just before it."""
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORT_PROBE],
+        cwd=_REPO,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    probe = json.loads(out.stdout.strip().splitlines()[-1])
+    root = os.path.realpath(_REPO)
+    at_root = sorted(
+        {p for p in probe["opened"] if os.path.dirname(p) == root}
+    )
+    assert not at_root, f"import opened repo-root files: {at_root}"
+
+    groups = []
+    for module in probe["modules"]:
+        if not groups or groups[-1] != module:
+            groups.append(module)
+    assert len(groups) == len(set(groups)), (
+        "a module's keys are not contiguous in REGISTRY"
+    )
+    order: list = []
+
+    def visit(name):
+        if name not in order:
+            for dep in _query_imports(name):
+                visit(dep)
+            order.append(name)
+
+    listed = _query_imports("__init__")
+    for name in listed:
+        visit(name)
+    names = [g.rsplit(".", 1)[1] for g in groups]
+    assert set(listed) <= set(names), "a listed module registers no key"
+    assert names == [n for n in order if n in names]
 
 
 def test_fixture_has_all_five_order_priorities():

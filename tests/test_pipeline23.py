@@ -160,8 +160,8 @@ def test_column_profile_two_scans_one_expand(spark):
     over ONE scan (six separate distinct jobs is the naive plan this
     key exists to avoid); the plain rows/nulls/min-max aggregate is a
     SECOND scan with no Expand — measured 2.6x cheaper than hauling
-    the plain aggregates through the x7 fan-out
-    (scripts/profile_cost_check.py, PLANS.md round-11)."""
+    the plain aggregates through the x7 fan-out (PLANS.md
+    "Round-11 additions")."""
     plan = (
         _df(spark, "dq_column_profile")
         ._jdf.queryExecution()

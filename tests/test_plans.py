@@ -708,12 +708,8 @@ def test_mm_video_dedup_stays_jvm_after_kernel(spark, sf_dir):
 # is order-insensitive; doc_chunk_overlap's sort alone measured 12.95x
 # at the 10x doc step).  Bounded-output aggregates and keys whose
 # declared semantics include ordering (TPC-H shapes, top-k, sort
-# showcases) keep theirs and are NOT listed here.  Single-sourced from
-# s3spark/queries/_audit.py (round-8 ADVICE: the list was duplicated
-# here and in the dirty-key bookkeeping and would have drifted).
-from s3spark.queries._audit import SORT_FREE_KEYS as _ROW_SCALE_SORT_FREE
-
-
+# showcases) keep theirs and are NOT listed here.  Row-scale keys added
+# later join the list from their first commit.
 def test_row_scale_keys_have_no_global_sort_anywhere(spark, sf_dir):
     """No row-count-scale key may contain a range-partitioning exchange
     ANYWHERE in its physical plan.  Guards the round-8 sweep against
@@ -727,8 +723,57 @@ def test_row_scale_keys_have_no_global_sort_anywhere(spark, sf_dir):
     shapes these keys ARE allowed (``orderBy().limit()`` →
     TakeOrderedAndProject, e.g. tokenizer_vocab_coverage's vocab cut)
     plan with no range exchange at all."""
+    sort_free = (
+        "agg_having", "array_set_algebra", "attribution_last_touch",
+        "cdc_apply_tombstones", "dedup_exact",
+        "dedup_exact_normalized", "dedup_fuzzy_minhash",
+        "dedup_incremental_minhash", "dedup_keep_latest",
+        "dedup_minhash_survivors", "dedup_simhash",
+        "dedup_substring_exact", "dedup_substring_mask",
+        "dedup_url_canonical", "doc_boilerplate_strip",
+        "doc_chunk_overlap", "doc_fingerprint", "doc_segment_dedup",
+        "embedding_quantize_int8", "feature_target_encode",
+        "filter_rlike", "generator_explode_outer",
+        "graph_bfs_distance", "incremental_agg_maintenance",
+        "interval_coalesce", "interval_max_concurrency",
+        "interval_subtract_measure", "join_asof",
+        "join_asof_nearest", "join_asof_tolerance",
+        "join_bitemporal", "join_fuzzy_edit_distance",
+        "join_interval_overlap", "join_null_safe",
+        "join_phonetic_soundex", "join_pit_features",
+        "join_scd2_point_in_time", "join_spatial_grid",
+        "mm_audio_fingerprint_dedup", "mm_binary_meta",
+        "mm_decode_png", "mm_frame_sample_wav",
+        "mm_image_phash_dedup", "mm_image_resize",
+        "pack_sequences_greedy", "project_rename_enumerate",
+        "quality_classifier_hashed", "quality_gopher_rules",
+        "sample_hash_based", "scalar_binary_encode",
+        "scalar_bitwise", "scalar_conditional",
+        "scalar_datetime_extended", "scalar_hash_json",
+        "scalar_json_malformed", "scalar_point_in_polygon",
+        "scalar_string_extended", "scalar_try_error_safe",
+        "scalar_url_parse", "scan_text_regex_parse", "scan_xml",
+        "scd2_dimension", "sessionize_gaps",
+        "set_union_missing_columns", "sim_ann_lsh",
+        "sim_pq_codebook_assign", "split_leakage_safe",
+        "stream_session", "subquery_above_avg",
+        "subquery_scalar_global", "text_bigram_logprob",
+        "text_bm25_rank", "text_edit_distance", "text_lang_quality",
+        "text_langid_char_ngram", "text_pii_scrub",
+        "text_repetition_filter", "text_stats",
+        "text_tfidf_topterms", "text_token_bpe",
+        "text_unicode_normalize", "text_unigram_logprob",
+        "timeseries_downsample_lttb", "timeseries_gapfill",
+        "timeseries_interpolate_linear", "timeseries_ohlc_bars",
+        "tokenizer_vocab_coverage", "udf_arrow_map",
+        "udtf_python_custom", "window_count_distinct",
+        "window_cumulative_reset", "window_distribution",
+        "window_forward_fill", "window_islands_value_runs",
+        "window_moving_zscore", "window_pattern_match",
+        "window_rolling_median", "window_time_decay",
+    )
     offenders = []
-    for name in _ROW_SCALE_SORT_FREE:
+    for name in sort_free:
         df = REGISTRY[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().sparkPlan().toString()
         if "rangepartitioning" in plan:
