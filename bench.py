@@ -16,7 +16,7 @@ Per-key sampling is tiered by first-sample magnitude and committed
 history, and the tier used is recorded per key in BENCH_DETAIL.json
 ("mode": {key: "median3"|"min2"|"min2_hist"|"single"}) so cross-round
 diffs can tell estimator changes from real regressions: <=3 s →
-median-of-``$SPARK_GRAFT_BENCH_REPS`` (default 3); 3-6 s → min-of-2;
+median-of-``REPS`` (3); 3-6 s → min-of-2;
 >6 s → single shot UNLESS the first sample exceeds 2x the key's
 committed BENCH_DETAIL time, in which case one extra rep is taken and
 the MIN recorded ("min2_hist" — round-8's driver read
@@ -35,6 +35,11 @@ itself separates box load from plan regression per key.  The min/max
 spread is recorded alongside ("spread"), and multi-run streaming keys
 record a per-run wall-clock split ("run_split", from
 s3spark.telemetry).
+
+The sampling protocol is fixed by the module constants ``REPS``,
+``REP_CUTOFF_S``, ``SINGLE_CUTOFF_S`` and ``DETAIL_PATH``; the only
+settings read from the environment are ``SPARK_GRAFT_SF_DIR``,
+``SPARK_GRAFT_CPUS`` (via s3spark.session) and ``SPARK_GRAFT_SHUFFLE``.
 """
 
 from __future__ import annotations
@@ -88,6 +93,16 @@ HEADLINE_KEYS = (
     "doc_chunk_overlap",
 )
 
+# Sampling protocol (see the module docstring): samples per sub-cutoff
+# key, the median-of-REPS and min-of-2 band edges in seconds, and the
+# committed history the 2x check reads and each run rewrites.
+REPS = 3
+REP_CUTOFF_S = 3.0
+SINGLE_CUTOFF_S = 6.0
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+)
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -108,7 +123,6 @@ def main() -> None:
     except Exception as e:
         print(f"bench: warmup failed: {e}", file=sys.stderr)
 
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     # Sampling protocol by first-sample magnitude (round-7 verdict
     # evidence-durability item): sub-second keys are noise-dominated →
     # full median-of-N; the 3-6 s band gets ONE extra rep and records
@@ -124,19 +138,9 @@ def main() -> None:
     # 6 s — so the history check forces one extra rep (MIN recorded,
     # mode "min2_hist") wherever the static protocol would have stopped
     # at a single sample.
-    rep_cutoff = float(os.environ.get("SPARK_GRAFT_BENCH_REP_CUTOFF", "3.0"))
-    single_cutoff = float(
-        os.environ.get("SPARK_GRAFT_BENCH_SINGLE_CUTOFF", "6.0")
-    )
-    # Overridable so protocol tests can exercise the sampling logic
-    # against a scratch history without clobbering the committed
-    # BENCH_DETAIL.json (which is the 2x-check's reference data).
-    detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
     hist: dict[str, float] = {}
     try:
-        with open(detail_path, encoding="utf-8") as fh:
+        with open(DETAIL_PATH, encoding="utf-8") as fh:
             prev = json.load(fh)
         if isinstance(prev, dict) and isinstance(prev.get("queries"), dict):
             hist = {
@@ -166,11 +170,11 @@ def main() -> None:
         try:
             s1 = one_sample()
             samples.append(s1)
-            if s1 <= rep_cutoff:
-                for _ in range(reps - 1):
+            if s1 <= REP_CUTOFF_S:
+                for _ in range(REPS - 1):
                     samples.append(one_sample())
                 mode = f"median{len(samples)}"
-            elif s1 <= single_cutoff:
+            elif s1 <= SINGLE_CUTOFF_S:
                 samples.append(one_sample())
                 mode = "min2"
             elif name in hist and s1 > 2.0 * hist[name]:
@@ -237,7 +241,7 @@ def main() -> None:
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     from s3spark.telemetry import RUN_SPLITS
 
-    with open(detail_path, "w") as fh:
+    with open(DETAIL_PATH, "w") as fh:
         json.dump(
             {
                 "metric": "total_query_wall_clock",
@@ -250,7 +254,7 @@ def main() -> None:
                 "run_split": {
                     k: v for k, v in sorted(RUN_SPLITS.items()) if v
                 },
-                "reps": reps,
+                "reps": REPS,
                 "failures": failures,
                 "sf": sf_val,
                 "canary_ratio": (
@@ -292,7 +296,7 @@ def main() -> None:
                 "n_queries": len(times),
                 "n_failed": len(failures),
                 "n_load_suspect": len(load_suspect),
-                "reps": reps,
+                "reps": REPS,
                 "queries_file": "BENCH_DETAIL.json",
                 "sf": sf_val,
             }

@@ -580,11 +580,13 @@ def _plan_destinations(
     dest_file: str | None,
 ) -> list[tuple[str, str]]:
     """(source, destination) pairs with reference naming semantics:
-    explicit name enumerated iff >1 match (D4), else source basename."""
+    explicit name enumerated iff >1 match (D4), else source basename.
+    ``paths`` comes sorted from :func:`_collect_matches`, which fixes
+    the ``name_i`` numbering."""
     folder = naming.clean_folder_name(dest_folder)
     many = len(paths) > 1
     out = []
-    for i, src in enumerate(sorted(paths), start=1):
+    for i, src in enumerate(paths, start=1):
         name = naming.destination_file_name(
             source_full_path=src,
             dest_file_name=dest_file,

@@ -8,7 +8,7 @@ regression (r09 read window_running at 1.32 s vs 0.44 committed with
 no marker).
 
 The registry is swapped for two fast synthetic keys and the detail
-path redirected (SPARK_GRAFT_BENCH_DETAIL) so the committed
+path redirected (``bench.DETAIL_PATH``) so the committed
 BENCH_DETAIL.json — the protection's reference data — is never
 touched.
 """
@@ -44,17 +44,22 @@ def bench_run(spark, tmp_path, monkeypatch):
         REGISTRY["fake_key"] = _FakeQuery(
             lambda s, sf: s.range(8).selectExpr("id", "id * 2 AS dbl")
         )
-        monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", str(detail))
+        committed = bench.DETAIL_PATH
+        with open(committed, "rb") as fh:
+            before = fh.read()
+        monkeypatch.setattr(bench, "DETAIL_PATH", str(detail))
         monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
         # a cold JVM can push the first sample past the 3 s rep
         # cutoff; pin it high so the mode under test is deterministic
-        monkeypatch.setenv("SPARK_GRAFT_BENCH_REP_CUTOFF", "60")
-        monkeypatch.setenv("SPARK_GRAFT_BENCH_SINGLE_CUTOFF", "120")
+        monkeypatch.setattr(bench, "REP_CUTOFF_S", 60.0)
+        monkeypatch.setattr(bench, "SINGLE_CUTOFF_S", 120.0)
         try:
             bench.main()
         finally:
             REGISTRY.clear()
             REGISTRY.update(saved)
+        with open(committed, "rb") as fh:
+            assert fh.read() == before, "committed BENCH_DETAIL.json rewritten"
         return json.loads(detail.read_text())
 
     return run

@@ -191,7 +191,7 @@ def test_comparator_reproduces_driver_list_cell_failure():
         normalize(single)
 
 
-def test_every_key_output_schema_is_driver_hashable(spark, sf_dir):
+def test_every_key_output_schema_is_driver_hashable(key_plan):
     """The driver canonicalizes every result via pandas
     sort_values-then-hash, which throws ``TypeError: unhashable type``
     on list/map/struct cells (CORRECTNESS_r04: embedding_centroids,
@@ -202,14 +202,10 @@ def test_every_key_output_schema_is_driver_hashable(spark, sf_dir):
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     offenders = []
-    for name in sorted(REGISTRY):
-        if name == "stream_watermark_dedup":
-            continue  # executes a streaming job; its flat schema is
-            # pinned by its own oracle test
-        df = REGISTRY[name].fn(spark, sf_dir)
+    for name, kp in key_plan.every():
         bad = [
             f.name
-            for f in df.schema.fields
+            for f in kp.schema.fields
             if isinstance(f.dataType, (ArrayType, MapType, StructType))
         ]
         if bad:

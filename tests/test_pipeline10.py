@@ -10,27 +10,21 @@ from s3spark.registry import REGISTRY
 SF = "/root/testdata/sf0.01"
 
 
-def _plan(spark, key):
-    return (
-        REGISTRY[key].fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-    )
-
-
-def test_sql_udf_scalar_inlines_as_macro(spark):
+def test_sql_udf_scalar_inlines_as_macro(key_plan):
     """The SQL-bodied function must disappear into the plan: no
     Python eval stage, decimal partial aggregation intact — identical
     shape to writing the expression inline."""
-    plan = _plan(spark, "sql_udf_scalar")
+    plan = key_plan("sql_udf_scalar").plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
     assert "partial_sum" in plan
     assert "HashAggregate" in plan
 
 
-def test_sql_udf_table_pushes_parameter_filter(spark):
+def test_sql_udf_table_pushes_parameter_filter(key_plan):
     """The TVF's region parameter must reach the nation scan as a
     pushed filter — proof the body inlined as a parameterized view
     rather than materializing."""
-    plan = _plan(spark, "sql_udf_table")
+    plan = key_plan("sql_udf_table").plan
     assert "PushedFilters" in plan
     assert "EqualTo(n_regionkey,2)" in plan
     assert "BroadcastHashJoin" in plan
@@ -57,10 +51,10 @@ def test_sql_scripting_variable_matches_independent_mean(spark):
     assert got == expect
 
 
-def test_sql_execute_immediate_binds_reach_scan(spark):
+def test_sql_execute_immediate_binds_reach_scan(key_plan):
     """The USING binds must land in the orders scan as pushed filters
     (typed constants, not post-scan predicates)."""
-    plan = _plan(spark, "sql_execute_immediate")
+    plan = key_plan("sql_execute_immediate").plan
     assert "PushedFilters" in plan
     assert "GreaterThanOrEqual(o_totalprice,150000.0)" in plan
     # the status bind is also pushed, but FileScan's toString truncates

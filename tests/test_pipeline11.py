@@ -18,10 +18,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-
-
 def _events(spark):
     from s3spark.io import table
 
@@ -77,10 +73,10 @@ def test_interval_subtract_matches_bruteforce(spark):
         assert r.effective_us == am - inter, uid
 
 
-def test_interval_subtract_plan_single_window_single_exchange(spark):
+def test_interval_subtract_plan_single_window_single_exchange(key_plan):
     """Both coverage cumsums and the lead share ONE Window operator
     on one user_id hash exchange; the per-user aggregate reuses it."""
-    plan = _plan(spark, "interval_subtract_measure")
+    plan = key_plan("interval_subtract_measure").plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("Window [") == 1
     assert "BatchEvalPython" not in plan
@@ -120,10 +116,10 @@ def test_cumulative_reset_matches_pandas(spark):
         assert abs(got.loc[r.event_id].cum_since_reset - r.v) < 1e-6
 
 
-def test_cumulative_reset_plan_shares_user_exchange(spark):
+def test_cumulative_reset_plan_shares_user_exchange(key_plan):
     """The segment window and the per-segment running sum must share
     the user_id hash partitioning — one exchange, two windows."""
-    plan = _plan(spark, "window_cumulative_reset")
+    plan = key_plan("window_cumulative_reset").plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert "BatchEvalPython" not in plan
 
@@ -186,11 +182,11 @@ def test_seasonal_decompose_matches_numpy(spark):
     assert len(rows) == 24
 
 
-def test_seasonal_decompose_plan_reduces_before_windows(spark):
+def test_seasonal_decompose_plan_reduces_before_windows(key_plan):
     """The raw event scan must collapse to the hourly series (partial
     aggregate) BEFORE any window: the unpartitioned windows run over
     the calendar-bounded table only."""
-    plan = _plan(spark, "timeseries_seasonal_decompose")
+    plan = key_plan("timeseries_seasonal_decompose").plan
     wpos = plan.index("Window")
     assert "partial_sum" in plan[wpos:]
     assert "BatchEvalPython" not in plan

@@ -21,10 +21,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-
-
 # ---------------------------------------------------------------------------
 # agg_entropy_gini
 # ---------------------------------------------------------------------------
@@ -59,7 +55,7 @@ def test_entropy_gini_matches_numpy(spark):
         assert abs(r.gini_impurity - gini) <= 1e-15, seg
 
 
-def test_entropy_bounds_and_plan(spark):
+def test_entropy_bounds_and_plan(spark, key_plan):
     """0 ≤ gini < 1, 0 ≤ entropy ≤ log2(k); the fact side must NOT
     shuffle for the dim join (broadcast) and no Python stage runs."""
     rows = _df(spark, "agg_entropy_gini").collect()
@@ -67,7 +63,7 @@ def test_entropy_bounds_and_plan(spark):
     for r in rows:
         assert 0.0 <= r.gini_impurity < 1.0
         assert -1e-9 <= r.entropy_bits <= math.log2(r.n_priorities) + 1e-9
-    plan = _plan(spark, "agg_entropy_gini")
+    plan = key_plan("agg_entropy_gini").plan
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan
 
@@ -91,13 +87,13 @@ def test_cusum_matches_procedural_loop(spark):
         assert int(r.alarm) == (1 if 100 * c > tot * nn else 0)
 
 
-def test_cusum_both_alarm_states_and_plan(spark):
+def test_cusum_both_alarm_states_and_plan(spark, key_plan):
     """The 1%-of-total threshold fires on some but not all days at
     sf0.01; the plan must partial-aggregate to the daily series
     BELOW the (calendar-bounded) global windows."""
     pdf = _df(spark, "timeseries_changepoint_cusum").toPandas()
     assert 0 < int(pdf.alarm.sum()) < len(pdf)
-    plan = _plan(spark, "timeseries_changepoint_cusum")
+    plan = key_plan("timeseries_changepoint_cusum").plan
     wpos = plan.index("Window")
     assert "partial_sum" in plan[wpos:]
     assert "BatchEvalPython" not in plan
@@ -143,11 +139,11 @@ def test_ndcg_matches_python_scorer(spark):
             assert r.ndcg is None
 
 
-def test_ndcg_plan_windowgrouplimit_and_bounds(spark):
+def test_ndcg_plan_windowgrouplimit_and_bounds(spark, key_plan):
     """The rank ≤ 10 filter must plan as WindowGroupLimit (distributed
     partial top-K, not a full per-nation sort pushed to one pass) and
     NDCG ∈ [0, 1]."""
-    plan = _plan(spark, "rank_metrics_ndcg")
+    plan = key_plan("rank_metrics_ndcg").plan
     assert "WindowGroupLimit" in plan
     assert "BatchEvalPython" not in plan
     for r in _df(spark, "rank_metrics_ndcg").collect():
@@ -209,9 +205,9 @@ def test_k_anonymity_audit_invariants(spark):
     assert list(got2.n) == list(exp2.n)
 
 
-def test_k_anonymity_plan_broadcasts_dim(spark):
+def test_k_anonymity_plan_broadcasts_dim(key_plan):
     """The nation dim joins by broadcast; the only fact shuffle is
     the quasi-identifier aggregation (partial-aggregated)."""
-    plan = _plan(spark, "privacy_k_anonymity")
+    plan = key_plan("privacy_k_anonymity").plan
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan

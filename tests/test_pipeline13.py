@@ -20,10 +20,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-
-
 def _daily_cents(spark):
     from s3spark.io import table
 
@@ -65,12 +61,12 @@ def test_autocorrelation_matches_numpy(spark):
     assert all(abs(r.acf) < 0.2 for r in out)
 
 
-def test_autocorrelation_plan_reduces_before_windows(spark):
+def test_autocorrelation_plan_reduces_before_windows(key_plan):
     """The orders scan must collapse to the calendar-bounded daily
     series (partial aggregate) BEFORE any window — the unpartitioned
     lag/total windows run over <=2,400 rows regardless of fact scale
     (same shape argument as timeseries_seasonal_decompose)."""
-    plan = _plan(spark, "timeseries_autocorrelation")
+    plan = key_plan("timeseries_autocorrelation").plan
     wpos = plan.index("Window")
     assert "partial_sum" in plan[wpos:]
     assert "BatchEvalPython" not in plan
@@ -105,11 +101,11 @@ def test_ztest_matches_plain_python(spark):
     assert abs(n1 - 7500) < 3 * math.sqrt(15000 * 0.25)
 
 
-def test_ztest_plan_is_one_scan_no_join(spark):
+def test_ztest_plan_is_one_scan_no_join(key_plan):
     """The whole key must be one scan + one map-side-combined
     reduction: no join, no window, no Python, no extra shuffle beyond
     the single-row final aggregation."""
-    plan = _plan(spark, "stats_ab_proportion_ztest")
+    plan = key_plan("stats_ab_proportion_ztest").plan
     for op in ("Join", "Window", "BatchEvalPython", "CartesianProduct"):
         assert op not in plan, op
     assert "partial_sum" in plan  # map-side combine before the 1-row agg
@@ -204,13 +200,13 @@ def test_rfm_segments_non_vacuous(spark):
     }
 
 
-def test_rfm_plan_broadcasts_scalars(spark):
+def test_rfm_plan_broadcasts_scalars(key_plan):
     """The per-customer metric table is materialized once (lineage
     break — orders is scanned exactly once, in the write job), so the
     returned plan reads only the compact scratch table: ONE 1-row
     quartile-bounds broadcast (declared constant-build BNLJ), no
     orders scan, no re-shuffle of the metric rows before scoring."""
-    plan = _plan(spark, "rfm_customer_segments")
+    plan = key_plan("rfm_customer_segments").plan
     assert plan.count("BroadcastNestedLoopJoin") == 1
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
@@ -255,13 +251,13 @@ def test_orphans_match_pandas_audit(spark):
     assert 0.05 < out["orders->customer_snapshot"].orphan_row_share < 0.15
 
 
-def test_orphans_plan_shapes(spark):
+def test_orphans_plan_shapes(key_plan):
     """Every audit must be a hash-based EQUI-join on the FK (the
     planner is free to broadcast the key-only dim side at fixture
     scale and to shuffle it at 100 TB — the lineitem->orders audit
     passes no broadcast hint for exactly that reason); no nested
     loops, no Python, and the dim builds carry only the key column."""
-    plan = _plan(spark, "dq_referential_orphans")
+    plan = key_plan("dq_referential_orphans").plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan

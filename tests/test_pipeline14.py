@@ -22,10 +22,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-
-
 # ---------------------------------------------------------------------------
 # stats_bootstrap_ci_poisson
 # ---------------------------------------------------------------------------
@@ -70,12 +66,12 @@ def test_bootstrap_matches_hashlib_replay(spark):
     assert (r.ci95_hi - r.ci95_lo) < 0.2 * r.point_mean
 
 
-def test_bootstrap_plan_shapes(spark):
+def test_bootstrap_plan_shapes(key_plan):
     """The fan-out must ride the scan: per-resample sums partial-
     aggregate BEFORE the (64-group) shuffle; the only unpartitioned
     window ranks the 64 means; the point estimate is a declared 1-row
     cross join; no Python anywhere."""
-    plan = _plan(spark, "stats_bootstrap_ci_poisson")
+    plan = key_plan("stats_bootstrap_ci_poisson").plan
     assert "BatchEvalPython" not in plan
     assert "partial_sum" in plan
     assert plan.count("Window") == 1
@@ -132,13 +128,13 @@ def test_rake_matches_python_replay(spark):
         assert not ({"a", "the"} & set(r.phrase.split(" "))), r.phrase
 
 
-def test_rake_plan_shapes(spark):
+def test_rake_plan_shapes(key_plan):
     """The top-20 must be a distributed partial top-K
     (TakeOrderedAndProject — never a single-partition window); word
     stats broadcast back to the phrase words; no Python; the returned
     plan reads only the materialized phrase table (document scan
     happens once, in the write job)."""
-    plan = _plan(spark, "text_keyword_rake")
+    plan = key_plan("text_keyword_rake").plan
     assert "TakeOrderedAndProject" in plan
     assert "BatchEvalPython" not in plan
     assert "BroadcastHashJoin" in plan
@@ -194,11 +190,11 @@ def test_freshness_matches_pandas_audit(spark):
     assert e.missing_periods == 0 and e.n_gap_runs == 0 and e.longest_gap_run == 0
 
 
-def test_freshness_plan_shapes(spark):
+def test_freshness_plan_shapes(key_plan):
     """Spines are GENERATED from 1-row min/max aggregates (no join
     against the fact); every cross join is a declared 1-row
     constant build; windows run only over calendar-bounded tables."""
-    plan = _plan(spark, "dq_freshness_calendar_gaps")
+    plan = key_plan("dq_freshness_calendar_gaps").plan
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") == 4  # gaps+bounds per series
@@ -243,11 +239,11 @@ def test_pct_change_matches_numpy(spark):
         assert r.roll28_cents == int(x[max(0, i - 27): i + 1].sum())
 
 
-def test_pct_change_plan_reduces_before_window(spark):
+def test_pct_change_plan_reduces_before_window(key_plan):
     """Orders must collapse to the calendar-bounded daily series
     before the single shared window sort (lag1/lag7/rolling-28 all
     ride one Window operator)."""
-    plan = _plan(spark, "timeseries_pct_change")
+    plan = key_plan("timeseries_pct_change").plan
     wpos = plan.index("Window")
     assert "partial_sum" in plan[wpos:]
     assert plan.count("Window") == 1

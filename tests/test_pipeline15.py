@@ -20,10 +20,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-
-
 def _cohort_cents(spark):
     """(value_cents, is_urgent) arrays shared by the KS and PSI replays."""
     from s3spark.io import table
@@ -89,11 +85,11 @@ def test_chi2_matches_plain_python(spark):
     assert r.chi2 < 3 * 26.296228
 
 
-def test_chi2_plan_broadcasts_dim_one_fact_shuffle(spark):
+def test_chi2_plan_broadcasts_dim_one_fact_shuffle(key_plan):
     """The fact side joins the customer dim via broadcast hash join and
     partial-aggregates map-side; every window runs on the bounded
     25-cell table — no nested loop, no Python, no extra fact shuffle."""
-    plan = _plan(spark, "stats_chi2_independence")
+    plan = key_plan("stats_chi2_independence").plan
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -135,7 +131,7 @@ def test_ks_matches_exact_integer_replay(spark):
     assert na > 1000 and nb > 1000 and 0.0 < r.d_stat < 1.0
 
 
-def test_ks_plan_never_single_partition_sorts_cells(spark):
+def test_ks_plan_never_single_partition_sorts_cells(spark, key_plan):
     """The distinct-value cell table must NEVER pass through a global
     unpartitioned window: the cumsum is per-bucket windows (partitioned
     by bkt) plus a ≤64-row offset table.  The checkpoint jobs carry the
@@ -149,7 +145,7 @@ def test_ks_plan_never_single_partition_sorts_cells(spark):
 
     # returned plan: reads the checkpointed diff table only — the fact
     # is scanned exactly once, inside the cell checkpoint job
-    plan = _plan(spark, "stats_ks_two_sample")
+    plan = key_plan("stats_ks_two_sample").plan
     assert "orders.parquet" not in plan
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -213,11 +209,11 @@ def test_psi_matches_numpy_replay(spark):
     assert r0.psi_total < 0.1
 
 
-def test_psi_plan_one_fact_shuffle_to_bins(spark):
+def test_psi_plan_one_fact_shuffle_to_bins(key_plan):
     """One scan, row-local bin ids off the 1-row broadcast, ONE
     map-side-combined shuffle to 10 bins; exactly one declared
     constant-build BNLJ (the min/max broadcast), no Python."""
-    plan = _plan(spark, "dq_drift_psi")
+    plan = key_plan("dq_drift_psi").plan
     assert plan.count("BroadcastNestedLoopJoin") == 1
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan

@@ -21,10 +21,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-
-
 def _cohorts(spark):
     from s3spark.io import table
 
@@ -77,10 +73,10 @@ def test_welch_matches_plain_python_bit_for_bit(spark):
     assert abs(t) < 5.0 and dof > 1000.0
 
 
-def test_welch_plan_is_one_reduction(spark):
+def test_welch_plan_is_one_reduction(key_plan):
     """One scan → one map-side-combined 2-group reduction → 1-row
     pivot.  No join, no window, no Python, no nested loop."""
-    plan = _plan(spark, "stats_welch_ttest")
+    plan = key_plan("stats_welch_ttest").plan
     for op in ("Join", "Window", "BatchEvalPython", "CartesianProduct"):
         assert op not in plan, op
     assert "partial_" in plan  # map-side combine
@@ -126,11 +122,11 @@ def test_mann_whitney_matches_exact_integer_replay(spark):
     assert abs(z) < 5.0 and abs(rb) < 0.1
 
 
-def test_mann_whitney_plan_shapes(spark):
+def test_mann_whitney_plan_shapes(key_plan):
     """The returned plan reads the materialized cell table (the fact
     is scanned exactly once, in the write job); exactly one declared
     1-row stats BNLJ; the rank windows are bucket-partitioned."""
-    plan = _plan(spark, "stats_mann_whitney_u")
+    plan = key_plan("stats_mann_whitney_u").plan
     assert "orders.parquet" not in plan
     # the 1-row range-stats crossJoin appears TWICE: the bucketed cell
     # table has two consumers (local windows + bucket totals) and Spark
@@ -192,12 +188,12 @@ def test_spearman_matches_exact_rank_replay(spark):
     assert 0.9 < rho < 0.99999 and r.sig_95 == 1
 
 
-def test_spearman_plan_shapes(spark):
+def test_spearman_plan_shapes(key_plan):
     """The returned plan reads the materialized row/cell scratch
     tables (ONE lineitem scan total, in the row write job); the two
     1-row range-stats broadcasts are the only BNLJs; the x rank map
     joins by broadcast; no Python."""
-    plan = _plan(spark, "stats_spearman_corr")
+    plan = key_plan("stats_spearman_corr").plan
     assert "lineitem.parquet" not in plan
     # two rank maps x two plan-tree copies of each 1-row range-stats
     # crossJoin (see the Mann-Whitney gate) = 4, plus the two 1-row
@@ -294,11 +290,11 @@ def test_hll_registers_match_hashlib_replay(spark):
     )
 
 
-def test_hll_plan_shapes(spark):
+def test_hll_plan_shapes(key_plan):
     """The returned plan reads the materialized register table (the
     union scan runs once, in the write job) plus the single exact-side
     rollup scan; hash equi-joins only; no Python, no nested loop."""
-    plan = _plan(spark, "agg_hll_hand_portable")
+    plan = key_plan("agg_hll_hand_portable").plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan

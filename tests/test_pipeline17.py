@@ -21,10 +21,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-
-
 # ---------------------------------------------------------------------------
 # timeseries_theil_sen
 # ---------------------------------------------------------------------------
@@ -78,7 +74,7 @@ def test_theil_sen_matches_exact_integer_replay(spark):
     assert abs(slope) < 1e6
 
 
-def test_theil_sen_plan_shapes(spark):
+def test_theil_sen_plan_shapes(key_plan):
     """The returned plan reads only the checkpointed bucketed slopes
     (orders was reduced to the calendar-bounded daily rows at build
     time and the pair join + range bucketing ran inside the checkpoint
@@ -86,7 +82,7 @@ def test_theil_sen_plan_shapes(spark):
     those, and attaches the bucket offsets as LITERALS (round-12 —
     no offset-table join at all) — no fact rescan, no Python, no
     nested loop, no join of any kind in the returned plan."""
-    plan = _plan(spark, "timeseries_theil_sen")
+    plan = key_plan("timeseries_theil_sen").plan
     assert "orders.parquet" not in plan
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -133,12 +129,12 @@ def test_zipf_fit_matches_python_regression(spark):
     assert r.zipf_like == 0
 
 
-def test_zipf_plan_distributed_topk(spark):
+def test_zipf_plan_distributed_topk(key_plan):
     """The top-K cut must be TakeOrderedAndProject (distributed
     partial top-K — the tokenizer_vocab_coverage rewrite pattern),
     with the rank window running only on the bounded post-limit rows;
     token counting partial-aggregates map-side; no Python."""
-    plan = _plan(spark, "text_zipf_fit")
+    plan = key_plan("text_zipf_fit").plan
     assert "TakeOrderedAndProject" in plan
     assert "BatchEvalPython" not in plan
     assert "partial_count" in plan
@@ -188,11 +184,11 @@ def test_l_diversity_matches_pandas_audit(spark):
     assert any(lv < 3 for lv in rows) and any(lv >= 3 for lv in rows)
 
 
-def test_l_diversity_plan_shapes(spark):
+def test_l_diversity_plan_shapes(key_plan):
     """Fact broadcast-joins the dim; ONE map-side-combined QI shuffle;
     the l-distribution rollup runs on the bounded group table; no
     nested loop, no Python."""
-    plan = _plan(spark, "privacy_l_diversity")
+    plan = key_plan("privacy_l_diversity").plan
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan

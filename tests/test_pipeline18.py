@@ -21,10 +21,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-
-
 # ---------------------------------------------------------------------------
 # stats_permutation_test
 # ---------------------------------------------------------------------------
@@ -82,10 +78,10 @@ def test_permutation_test_matches_hashlib_replay(spark):
     assert r.reject_05 == 0 and 0.0 < r.p_value <= 1.0
 
 
-def test_permutation_plan_one_fanout_shuffle(spark):
+def test_permutation_plan_one_fanout_shuffle(key_plan):
     """The x64 fan-out rides the scan; one map-side-combined shuffle
     to 64 rows; 1-row broadcasts only; no Python."""
-    plan = _plan(spark, "stats_permutation_test")
+    plan = key_plan("stats_permutation_test").plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     assert 2 <= plan.count("BroadcastNestedLoopJoin") <= 6
@@ -139,14 +135,14 @@ def test_novelty_matches_pandas_replay(spark):
     assert any(0.0 < r.avg_novelty < 1.0 for r in rows.values())
 
 
-def test_novelty_plan_shapes(spark):
+def test_novelty_plan_shapes(key_plan):
     """One distinct (doc,trigram) shuffle, df attached as a WINDOW
     count over the trigram key (round 13 — the old groupBy +
     equi-join-back shape replayed the shingle subtree on both join
     sides; this gate previously pinned exactly 1 hash join and now
     pins the strictly better 0-join form), bounded source rollup;
     no nested loop, no Python."""
-    plan = _plan(spark, "text_ngram_novelty")
+    plan = key_plan("text_ngram_novelty").plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
@@ -198,10 +194,10 @@ def test_sequence_audit_matches_pandas(spark):
     assert rows["events_double_delivery"].duplicate_rows > 100
 
 
-def test_sequence_audit_plan_shapes(spark):
+def test_sequence_audit_plan_shapes(key_plan):
     """Union of scans into one map-side-combined aggregate per
     series; no join, no nested loop, no Python."""
-    plan = _plan(spark, "dq_sequence_id_audit")
+    plan = key_plan("dq_sequence_id_audit").plan
     for op in ("Join", "CartesianProduct", "BatchEvalPython"):
         assert op not in plan, op
     assert "partial_count" in plan or "partial_min" in plan

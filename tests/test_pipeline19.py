@@ -140,13 +140,8 @@ def test_point_in_polygon_matches_python_ray_caster(spark):
     assert 0 < inside < len(rows)
 
 
-def test_point_in_polygon_is_map_only(spark):
-    plan = (
-        _df(spark, "scalar_point_in_polygon")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+def test_point_in_polygon_is_map_only(key_plan):
+    plan = key_plan("scalar_point_in_polygon").plan
     assert "Exchange" not in plan, plan
 
 

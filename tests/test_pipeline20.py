@@ -74,13 +74,8 @@ def test_bitemporal_late_corrections_are_invisible(spark):
     assert late.count() > 0
 
 
-def test_bitemporal_plans_window_group_limit(spark):
-    plan = (
-        _df(spark, "join_bitemporal")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+def test_bitemporal_plans_window_group_limit(key_plan):
+    plan = key_plan("join_bitemporal").plan
     assert "WindowGroupLimit" in plan, plan
 
 
@@ -97,17 +92,12 @@ def test_checksum_roundtrip_matches_and_tamper_diverges(spark):
     assert rows["source"][1] != rows["tampered"][1]  # different sum
 
 
-def test_checksum_single_source_scan(spark):
+def test_checksum_single_source_scan(key_plan):
     """Round-9 verdict item 3: source+tampered fingerprints must be
     conditional aggregates of ONE lineitem scan (stack-fanned after
     the 1-row aggregate), with the roundtrip copy keeping exactly one
     scan of its own physically re-read files."""
-    plan = (
-        _df(spark, "dq_table_checksum")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = key_plan("dq_table_checksum").plan
     assert plan.count("lineitem.parquet") == 1, plan
     assert plan.count("ck_roundtrip") == 1, plan
 

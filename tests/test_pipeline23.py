@@ -155,18 +155,13 @@ def test_column_profile_matches_pandas(spark):
     assert rows["o_orderdate"].min_s == str(pdf["o_orderdate"].min())[:10]
 
 
-def test_column_profile_two_scans_one_expand(spark):
+def test_column_profile_two_scans_one_expand(key_plan):
     """The 6 exact COUNT(DISTINCT)s must compile to ONE Expand pass
     over ONE scan (six separate distinct jobs is the naive plan this
     key exists to avoid); the plain rows/nulls/min-max aggregate is a
     SECOND scan with no Expand — measured 2.6x cheaper than hauling
     the plain aggregates through the x7 fan-out (PLANS.md
     "Round-11 additions")."""
-    plan = (
-        _df(spark, "dq_column_profile")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = key_plan("dq_column_profile").plan
     assert plan.count("orders.parquet") == 2, plan
     assert plan.count("Expand") == 1, plan

@@ -33,14 +33,13 @@ def test_persisted_read_equals_inline_e2e(spark, sf_dir):
     assert len(persisted) == _PQ_QUERIES * 5  # top-5 per query
 
 
-def test_persisted_read_scan_is_partition_pruned(spark, sf_dir):
+def test_persisted_read_scan_is_partition_pruned(key_plan):
     """The posting-list scan must carry a STATIC PartitionFilters
     IN-list on cluster_id (pruning decided at planning time — the
     scan_manifest_prune gate pattern) selecting at most
     Q x nprobe < K of the 16 posting-list directories, so non-probed
     partitions are never opened."""
-    df = REGISTRY["sim_ivfpq_persisted_read"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = key_plan("sim_ivfpq_persisted_read").plan
     idx_lines = [
         ln for ln in plan.splitlines() if "embeddings_ivfpq" in ln
     ]

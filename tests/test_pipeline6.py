@@ -98,7 +98,7 @@ def test_mad_gate_flags_mega_doc_and_spares_normals(spark, dup_corpus_dir):
         assert rows[src].med_chars < 100  # median untouched by the tail
 
 
-def test_vocab_join_is_broadcast_and_covers_all_tokens(spark, sf_dir):
+def test_vocab_join_is_broadcast_and_covers_all_tokens(spark, sf_dir, key_plan):
     """The vocab side must broadcast (never shuffle the token stream
     for the join); the top-K vocab cut must plan as
     TakeOrderedAndProject (distributed partial top-K) and NOT as a
@@ -109,11 +109,11 @@ def test_vocab_join_is_broadcast_and_covers_all_tokens(spark, sf_dir):
     count — no token dropped or double-counted by the left join."""
     import pyspark.sql.functions as F
 
-    df = REGISTRY["tokenizer_vocab_coverage"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = key_plan("tokenizer_vocab_coverage").plan
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
     assert "Window" not in plan  # no global-sort top-K anywhere in the key
+    df = REGISTRY["tokenizer_vocab_coverage"].fn(spark, sf_dir)
     total = df.agg(F.sum("n_tokens")).collect()[0][0]
     expected = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -257,17 +257,11 @@ def test_langid_char_ngram_separates_english_from_noise(spark, tmp_path_factory)
     assert out[2].lang_guess == "unk"
 
 
-def test_spatial_grid_plan_is_equi_join_not_cartesian(spark, sf_dir):
+def test_spatial_grid_plan_is_equi_join_not_cartesian(key_plan):
     """Grid blocking must plan as a hash equi-join on the cell key —
     never BroadcastNestedLoopJoin/CartesianProduct (the whole point of
     the 2-D banding)."""
-    plan = (
-        REGISTRY["join_spatial_grid"]
-        .fn(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = key_plan("join_spatial_grid").plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Join" in plan
@@ -302,17 +296,11 @@ WHERE (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) <= 0.02*0.02
         con.close()
 
 
-def test_training_prep_single_big_shuffle(spark, sf_dir):
+def test_training_prep_single_big_shuffle(key_plan):
     """The composed prep pipeline shuffles the document table ONCE
     (the digest-keyed window); every later exchange operates on
     |splits|-bounded aggregates."""
-    plan = (
-        REGISTRY["training_prep_e2e"]
-        .fn(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = key_plan("training_prep_e2e").plan
     import re
 
     big_exchanges = [

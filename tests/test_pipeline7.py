@@ -22,12 +22,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return (
-        _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-    )
-
-
 # ---------------------------------------------------------------------------
 # pareto_frontier
 # ---------------------------------------------------------------------------
@@ -116,11 +110,11 @@ def test_interval_coalesce_coverage_algebra(spark):
         assert r.covered_secs <= r.n_events * 300
 
 
-def test_interval_coalesce_single_exchange(spark):
+def test_interval_coalesce_single_exchange(key_plan):
     """Both windows and both aggregations must share ONE user_id hash
     partitioning — the whole key runs on a single big-side shuffle
     (plus the final presentation range sort)."""
-    plan = _plan(spark, "interval_coalesce")
+    plan = key_plan("interval_coalesce").plan
     assert plan.count("Exchange hashpartitioning") == 1
 
 
@@ -155,11 +149,11 @@ def test_pps_membership_recomputed_and_sized(spark):
         assert 0.0 < r.incl_prob <= 1.0
 
 
-def test_pps_is_map_only_over_big_side(spark):
+def test_pps_is_map_only_over_big_side(key_plan):
     """The only shuffle is the 1-row weight total (single-partition
     exchange); the document side itself must never hash-repartition —
     the keep decision rides the scan."""
-    plan = _plan(spark, "sample_pps_poisson")
+    plan = key_plan("sample_pps_poisson").plan
     assert "Exchange hashpartitioning" not in plan
 
 
@@ -213,10 +207,10 @@ def test_target_encode_leave_one_out_identity(spark):
         assert abs(r.loo_enc - expect) < 1e-4
 
 
-def test_target_encode_broadcasts_stats(spark):
+def test_target_encode_broadcasts_stats(key_plan):
     """Category stats must broadcast — the encode is a map-side join,
     no big-side shuffle for the probe table."""
-    plan = _plan(spark, "feature_target_encode")
+    plan = key_plan("feature_target_encode").plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -244,7 +238,7 @@ def test_pmi_bounds_and_support(spark):
         assert r.pmi <= round(ceiling, 6) + 1e-6
 
 
-def test_pmi_vocab_cut_is_distributed_topk(spark):
+def test_pmi_vocab_cut_is_distributed_topk(spark, key_plan):
     """The vocab bound must plan as TakeOrderedAndProject (distributed
     partial top-K), never a single-partition global window — same gate
     as tokenizer_vocab_coverage.  Round 13: the presence relation is
@@ -266,6 +260,6 @@ def test_pmi_vocab_cut_is_distributed_topk(spark):
     )
     assert "TakeOrderedAndProject" in vocab_plan
     assert "Window" not in vocab_plan
-    plan = _plan(spark, "cooccurrence_pmi")
+    plan = key_plan("cooccurrence_pmi").plan
     assert "ExistingRDD" in plan  # pres + dfreq read the checkpoint
     assert "Window" not in plan

@@ -22,10 +22,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-
-
 # ---------------------------------------------------------------------------
 # ml_linreg_normal_eq
 # ---------------------------------------------------------------------------
@@ -53,12 +49,12 @@ def test_linreg_matches_numpy_lstsq(spark):
         assert math.isclose(got, ref, rel_tol=1e-6), (got, ref)
 
 
-def test_linreg_plan_one_scan_pushdown_partial_agg(spark):
+def test_linreg_plan_one_scan_pushdown_partial_agg(key_plan):
     """Scale shape: ONE FileScan reading exactly the three feature
     columns, a partial (map-side) aggregate before the single-row
     exchange, and zero Python stages — the whole fit is one
     codegen'd reduction."""
-    plan = _plan(spark, "ml_linreg_normal_eq")
+    plan = key_plan("ml_linreg_normal_eq").plan
     assert plan.count("FileScan") == 1
     assert "l_quantity:double,l_extendedprice:double,l_discount" in plan
     assert "partial_sum" in plan
@@ -117,11 +113,11 @@ def test_concurrency_half_open_semantics(spark):
     assert peak == 1  # not 2: the sessions never overlap
 
 
-def test_concurrency_plan_single_hash_exchange(spark):
+def test_concurrency_plan_single_hash_exchange(key_plan):
     """The window and the per-user aggregate must share ONE
     hashpartitioning exchange (the only other exchange is the final
     presentation sort's rangepartitioning)."""
-    plan = _plan(spark, "interval_max_concurrency")
+    plan = key_plan("interval_max_concurrency").plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert "partial_max" in plan  # map-side combine above the window
     assert "BatchEvalPython" not in plan
@@ -152,11 +148,11 @@ def test_benford_table_algebra(spark, duck):
         )
 
 
-def test_benford_plan_constant_post_scan(spark):
+def test_benford_plan_constant_post_scan(key_plan):
     """One fact scan reading only o_totalprice; everything after the
     partial aggregate is constant-size (≤9 rows): the literal table
     joins broadcast and the total window is bounded by construction."""
-    plan = _plan(spark, "dq_benford_first_digit")
+    plan = key_plan("dq_benford_first_digit").plan
     assert plan.count("FileScan") == 1
     assert "ReadSchema: struct<o_totalprice:double>" in plan
     assert "partial_count" in plan or "partial_sum" in plan

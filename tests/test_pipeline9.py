@@ -19,10 +19,6 @@ def _df(spark, key):
     return REGISTRY[key].fn(spark, SF)
 
 
-def _plan(spark, key):
-    return _df(spark, key)._jdf.queryExecution().executedPlan().toString()
-
-
 # ---------------------------------------------------------------------------
 # agg_weighted_median
 # ---------------------------------------------------------------------------
@@ -49,14 +45,14 @@ def test_weighted_median_matches_independent_sweep(spark):
         assert rows[flag].total_qty == total
 
 
-def test_weighted_median_plan_two_level_bounded_windows(spark):
+def test_weighted_median_plan_two_level_bounded_windows(key_plan):
     """The scale shape: NO window runs over the full distinct-price
     cell table.  Exactly two windows — the bucket cumulative sum
     (bounded by groups × NB) and the in-bucket crossing (bounded by
     distinct/NB) — and the crossing bucket reaches the cells via a
     broadcast join.  A partial aggregate below everything bounds the
     only row-scale shuffle by the distinct-value count."""
-    plan = _plan(spark, "agg_weighted_median")
+    plan = key_plan("agg_weighted_median").plan
     assert plan.count("Window [") == 2
     assert "BroadcastHashJoin" in plan  # crossing-bucket broadcast
     wpos = plan.index("Window")
@@ -92,12 +88,12 @@ def test_systematic_doc_id_unique_fixture_invariant(spark):
     assert docs.count() == docs.select("doc_id").distinct().count()
 
 
-def test_systematic_plan_no_global_row_number_window(spark):
+def test_systematic_plan_no_global_row_number_window(key_plan):
     """The scale point of the key: document row numbers come from
     PER-BUCKET windows plus a bounded offset table — the only
     unpartitioned window is the bucket-count-row prefix sum, and the
     per-document window is partitioned by bucket."""
-    plan = _plan(spark, "sample_systematic_distributed_index")
+    plan = key_plan("sample_systematic_distributed_index").plan
     assert "windowspecdefinition(bucket" in plan
     # exactly two windows: per-bucket row_number + NB-row offset cumsum
     assert plan.count("Window [") == 2
@@ -193,10 +189,10 @@ def test_fallback_resolution_respects_priority(spark):
     assert got == {k: int(v) for k, v in expect.items()}
 
 
-def test_fallback_plan_single_fact_scan_all_broadcast(spark):
+def test_fallback_plan_single_fact_scan_all_broadcast(key_plan):
     """ONE orders scan; every rate level joins via broadcast (hash or
     the declared 1-row BNLJ); no shuffle of the fact table."""
-    plan = _plan(spark, "join_fallback_hierarchy")
+    plan = key_plan("join_fallback_hierarchy").plan
     assert plan.count("FileScan parquet [o_") == 1
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan

@@ -2,6 +2,13 @@
 pushdown, pruning, broadcast choice, codegen'd hot paths.  Correctness
 tests prove the answers right; these prove the *plans* are the ones
 that survive scale-up.
+
+Every default-conf plan read goes through the session-wide
+``key_plan`` fixture (tests/conftest.py): one shared plan pass that
+builds each registry key once and keeps its schema and executed-plan
+text, so the registry-wide gates here and in test_hygiene.py cost one
+pass between them.  A test that changes a session conf before it
+plans builds its key itself.
 """
 
 from __future__ import annotations
@@ -12,13 +19,8 @@ import s3spark.queries  # noqa: F401
 from s3spark.registry import REGISTRY
 
 
-def plan_of(spark, sf_dir, name: str) -> str:
-    df = REGISTRY[name].fn(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_projection_pushdown_prunes_columns(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "scan_projection_pushdown")
+def test_projection_pushdown_prunes_columns(key_plan):
+    plan = key_plan("scan_projection_pushdown").plan
     assert "PushedFilters: [IsNotNull(l_linenumber), EqualTo(l_linenumber,1)]" in plan
     # ReadSchema lists only the 3 referenced columns, not all 11
     read = plan[plan.index("ReadSchema") :].splitlines()[0]
@@ -26,30 +28,30 @@ def test_projection_pushdown_prunes_columns(spark, sf_dir):
     assert "l_extendedprice" not in read and "l_shipdate" not in read
 
 
-def test_flagship_pushes_shipdate_filter(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "agg_groupby")
+def test_flagship_pushes_shipdate_filter(key_plan):
+    plan = key_plan("agg_groupby").plan
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # partial + final hash aggregation (map-side combine before shuffle)
     assert plan.count("HashAggregate") >= 2
 
 
-def test_broadcast_hint_produces_broadcast_hash_join(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "join_broadcast")
+def test_broadcast_hint_produces_broadcast_hash_join(key_plan):
+    plan = key_plan("join_broadcast").plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
-def test_semi_join_is_a_join_not_distinct(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "join_semi")
+def test_semi_join_is_a_join_not_distinct(key_plan):
+    plan = key_plan("join_semi").plan
     assert "LeftSemi" in plan
 
 
-def test_topk_uses_take_ordered_not_global_sort(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "limit_topk")
+def test_topk_uses_take_ordered_not_global_sort(key_plan):
+    plan = key_plan("limit_topk").plan
     assert "TakeOrderedAndProject" in plan
 
 
-def test_hot_path_queries_have_no_python_eval(spark, sf_dir):
+def test_hot_path_queries_have_no_python_eval(key_plan):
     """Everything except the declared UDx/multimodal keys must stay
     JVM-side: no BatchEvalPython / ArrowEvalPython / MapInPandas
     operators in the plan."""
@@ -73,23 +75,21 @@ def test_hot_path_queries_have_no_python_eval(spark, sf_dir):
         "mm_frame_sample_video",
         "mm_video_phash_dedup",
     }
-    offenders = []
-    for name in sorted(REGISTRY):
-        if name in python_ok or name == "stream_watermark_dedup":
-            continue  # streaming key executes a query, skip plan dump
-        plan = plan_of(spark, sf_dir, name)
+    offenders = [
+        name
+        for name, kp in key_plan.every(python_ok)
         if any(
-            tok in plan
+            tok in kp.plan
             for tok in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")
-        ):
-            offenders.append(name)
+        )
+    ]
     assert not offenders, f"Python in hot path: {offenders}"
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
+def test_bucketed_join_has_no_exchange(key_plan):
     """The co-located join must read bucket-aligned files: SortMergeJoin
     with NO shuffle (and no per-side sort — buckets are pre-sorted)."""
-    plan = plan_of(spark, sf_dir, "join_bucketed_colocated")
+    plan = key_plan("join_bucketed_colocated").plan
     join_part = plan[: plan.index("HashAggregate")] if "HashAggregate" in plan else plan
     assert "SortMergeJoin" in plan
     # the only exchanges allowed are AFTER the join (for the groupBy)
@@ -143,11 +143,11 @@ def test_exact_match_filter_becomes_pushed_equality(spark, sf_dir):
     assert matched.count() == 1
 
 
-def test_disjunctive_predicates_derive_per_side_pushdown(spark, sf_dir):
+def test_disjunctive_predicates_derive_per_side_pushdown(key_plan):
     """q19: the OR-of-ANDs spans both join sides, so it can't push
     whole — but Catalyst derives each side's implied disjunction and
     pushes it into that scan, shrinking join inputs."""
-    plan = plan_of(spark, sf_dir, "q19_disjunctive")
+    plan = key_plan("q19_disjunctive").plan
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
     li = next(s for s in scans if "l_quantity" in s)
     p = next(s for s in scans if "p_brand" in s)
@@ -155,21 +155,21 @@ def test_disjunctive_predicates_derive_per_side_pushdown(spark, sf_dir):
     assert "Brand#12" in p.split("DataFilters:")[1]
 
 
-def test_banded_range_join_avoids_nested_loop(spark, sf_dir):
+def test_banded_range_join_avoids_nested_loop(key_plan):
     """join_range_bucketed: band-key equi join + residual must plan as
     a hash/merge join — the whole point vs join_theta_range's BNLJ."""
-    plan = plan_of(spark, sf_dir, "join_range_bucketed")
+    plan = key_plan("join_range_bucketed").plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "HashJoin" in plan or "SortMergeJoin" in plan
 
 
-def test_theta_range_broadcasts_the_bounded_side(spark, sf_dir):
+def test_theta_range_broadcasts_the_bounded_side(key_plan):
     """join_theta_range: the BNLJ must build/broadcast SUPPLIER (the
     bounded 1:15 side), never customer — broadcasting the growing side
     OOMs executors at scale.  Supplier is the left input, so the plan
     must say BuildLeft, and the supplier scan must sit under the
     broadcast exchange."""
-    plan = plan_of(spark, sf_dir, "join_theta_range")
+    plan = key_plan("join_theta_range").plan
     assert "BroadcastNestedLoopJoin BuildLeft" in plan
     exchange = plan[plan.index("BroadcastExchange") :]
     scan = exchange[exchange.index("Scan parquet") :].splitlines()[0]
@@ -177,93 +177,93 @@ def test_theta_range_broadcasts_the_bounded_side(spark, sf_dir):
     assert "customer" not in scan
 
 
-def test_q4_exists_decorrelates_to_semi_join(spark, sf_dir):
+def test_q4_exists_decorrelates_to_semi_join(key_plan):
     """q4: correlated EXISTS with non-equi correlate becomes one
     LeftSemi join carrying the inequality as residual; the quarter
     filter reaches the orders scan."""
-    plan = plan_of(spark, sf_dir, "q4_order_priority")
+    plan = key_plan("q4_order_priority").plan
     assert "LeftSemi" in plan
     assert "o_orderdate" in plan[plan.index("PushedFilters") :].splitlines()[0]
 
 
-def test_keep_latest_uses_window_group_limit(spark, sf_dir):
+def test_keep_latest_uses_window_group_limit(key_plan):
     """dedup_keep_latest: the rn=1 filter must push into the window as
     a per-partition top-1 (WindowGroupLimit), not a full per-key sort."""
-    plan = plan_of(spark, sf_dir, "dedup_keep_latest")
+    plan = key_plan("dedup_keep_latest").plan
     assert "WindowGroupLimit" in plan
 
 
-def test_multi_distinct_uses_expand(spark, sf_dir):
+def test_multi_distinct_uses_expand(key_plan):
     """agg_multi_distinct: several COUNT(DISTINCT) over different
     columns must plan as one Expand + two-level agg, not N jobs."""
-    plan = plan_of(spark, sf_dir, "agg_multi_distinct")
+    plan = key_plan("agg_multi_distinct").plan
     assert "Expand" in plan
 
 
-def test_dynamic_partition_pruning_fires(spark, sf_dir):
+def test_dynamic_partition_pruning_fires(key_plan):
     """join_partition_pruning_dynamic: the day filter arrives only via
     the dim join, yet the fact scan must carry a runtime
     dynamicpruningexpression partition filter."""
-    plan = plan_of(spark, sf_dir, "join_partition_pruning_dynamic")
+    plan = key_plan("join_partition_pruning_dynamic").plan
     assert "dynamicpruning" in plan.lower()
 
 
-def test_q9_broadcasts_all_dims_single_fact_shuffle(spark, sf_dir):
+def test_q9_broadcasts_all_dims_single_fact_shuffle(key_plan):
     """Q9 shape: part/supplier/nation legs all broadcast; the only
     non-broadcast join is the lineitem⋈orders fact join."""
-    plan = plan_of(spark, sf_dir, "q9_product_type_profit")
+    plan = key_plan("q9_product_type_profit").plan
     assert plan.count("BroadcastHashJoin") >= 3
     # the part name filter is pushed to the part scan, not post-join
     assert "PushedFilters: [IsNotNull(p_name)" in plan or "StringContains(p_name,widget)" in plan
 
 
-def test_q16_not_in_is_broadcast_anti_join(spark, sf_dir):
+def test_q16_not_in_is_broadcast_anti_join(key_plan):
     """The supplier exclusion runs as a broadcast LEFT ANTI join —
     never a shuffled subquery or a nested loop."""
-    plan = plan_of(spark, sf_dir, "q16_supplier_part_variety")
+    plan = key_plan("q16_supplier_part_variety").plan
     assert "LeftAnti" in plan and "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_corpus_mix_prunes_and_single_shuffle(spark, sf_dir):
+def test_corpus_mix_prunes_and_single_shuffle(key_plan):
     """The mixing decision rides the scan: only (doc_id, source) read
     from the footer, keep-logic in the scan-side Project, and exactly
     one hash exchange (the partial+final per-source agg)."""
-    plan = plan_of(spark, sf_dir, "corpus_mix_weighted_sample")
+    plan = key_plan("corpus_mix_weighted_sample").plan
     read = plan[plan.index("ReadSchema") :].splitlines()[0]
     assert "doc_id" in read and "source" in read and "text" not in read
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("HashAggregate") >= 2  # map-side combine present
 
 
-def test_q12_pushes_window_residual_join_filter(spark, sf_dir):
+def test_q12_pushes_window_residual_join_filter(key_plan):
     """The shipdate window pushes to the lineitem scan; the lateness
     predicate (correlating both join sides) stays a residual on the
     orderkey equi-join — NOT a nested loop."""
-    plan = plan_of(spark, sf_dir, "q12_shipmode_priority")
+    plan = key_plan("q12_shipmode_priority").plan
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate" in plan
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
 
 
-def test_q20_nested_in_is_two_broadcast_semi_joins(spark, sf_dir):
+def test_q20_nested_in_is_two_broadcast_semi_joins(key_plan):
     """Q20's doubly nested IN must plan as two broadcast LEFT SEMI
     joins (part keep-list into the fact scan, surviving suppkeys into
     supplier) — the fact table never widens and only one shuffle (the
     (partkey, suppkey) aggregate) remains."""
-    plan = plan_of(spark, sf_dir, "q20_part_promotion")
+    plan = key_plan("q20_part_promotion").plan
     assert plan.count("LeftSemi") >= 2
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_decontaminate_broadcasts_eval_side(spark, sf_dir):
+def test_decontaminate_broadcasts_eval_side(key_plan):
     """The held-out eval shingle set rides the task side; train
     shingles stream through map-side — no shuffle of the big side.
     The broadcast payload is the 8-byte xxhash64 key + doc id, never
     the raw 8-gram string: the string must not survive past the
     hashing Project (i.e. no `ngram` column in the exchanged/joined
     attributes, only in the scan-side Generate/Project)."""
-    plan = plan_of(spark, sf_dir, "decontaminate_ngram_overlap")
+    plan = key_plan("decontaminate_ngram_overlap").plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "xxhash64" in plan
@@ -276,30 +276,30 @@ def test_decontaminate_broadcasts_eval_side(spark, sf_dir):
     assert agg_lines and all("ngram#" not in ln for ln in agg_lines)
 
 
-def test_chunking_is_shuffle_free(spark, sf_dir):
+def test_chunking_is_shuffle_free(key_plan):
     """Chunking must be row-local (Scan -> Generate -> Project) with
     ZERO exchanges: round 8 dropped the trailing presentational
     orderBy, which range-shuffled ~1.33x the corpus text and made this
     the only super-linear scale-panel key (12.95x at 10x docs).
     Chunking 100 TB is exactly as parallel as scanning it."""
-    plan = plan_of(spark, sf_dir, "doc_chunk_overlap")
+    plan = key_plan("doc_chunk_overlap").plan
     assert "Generate explode" in plan
     assert plan.count("Exchange") == 0
 
 
-def test_ivf_assignment_is_mapside_argmax(spark, sf_dir):
+def test_ivf_assignment_is_mapside_argmax(key_plan):
     """IVF centroid assignment must be a pure map-side array-HOF
     argmax against the broadcast centroid array — the only Window (and
     its exchange) in the whole plan is the final per-query top-k.
     Rounds 1-2 ranked a 16xN crossJoin with row_number(), a full-table
     exchange+sort per branch; this pins the rewrite."""
-    plan = plan_of(spark, sf_dir, "sim_ann_ivf")
+    plan = key_plan("sim_ann_ivf").plan
     assert plan.count("Window [") == 1
     assert "array_max" in plan
     assert "BroadcastNestedLoopJoin" in plan  # 1-row centroid-array join
 
 
-def test_curation_pipeline_single_big_side_shuffle(spark, sf_dir):
+def test_curation_pipeline_single_big_side_shuffle(key_plan):
     """curation_pipeline_e2e composes quality -> decontaminate ->
     dedup-survivors -> pack without extra exchanges between stages:
     every join is broadcast (no SortMergeJoin anywhere), the full
@@ -307,47 +307,47 @@ def test_curation_pipeline_single_big_side_shuffle(spark, sf_dir):
     window, whose partitioning the final groupBy then reuses), and the
     only other exchanges are tiny-side distincts/broadcasts + the
     output sort."""
-    plan = plan_of(spark, sf_dir, "curation_pipeline_e2e")
+    plan = key_plan("curation_pipeline_e2e").plan
     assert "SortMergeJoin" not in plan
     assert plan.count("Exchange hashpartitioning(source") == 1
     assert plan.count("Exchange") <= 7
 
 
-def test_recursive_cte_runs_as_union_loop(spark, sf_dir):
+def test_recursive_cte_runs_as_union_loop(key_plan):
     """WITH RECURSIVE must execute as Spark 4's UnionLoop (anchor +
     per-level distributed join), not some collected driver loop."""
-    plan = plan_of(spark, sf_dir, "sql_recursive_cte")
+    plan = key_plan("sql_recursive_cte").plan
     assert "UnionLoop" in plan
 
 
-def test_lateral_topk_decorrelates_to_window_group_limit(spark, sf_dir):
+def test_lateral_topk_decorrelates_to_window_group_limit(key_plan):
     """The correlated LATERAL ORDER BY/LIMIT subquery must decorrelate
     into the WindowGroupLimit plan (same as topk_per_group) — a BNLJ
     here would mean per-outer-row re-execution."""
-    plan = plan_of(spark, sf_dir, "join_lateral_topk")
+    plan = key_plan("join_lateral_topk").plan
     assert "WindowGroupLimit" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_segment_dedup_is_two_shuffles(spark, sf_dir):
+def test_segment_dedup_is_two_shuffles(key_plan):
     """doc_segment_dedup: one exchange on segment text (window), one
     back on doc_id — corpus-scale dedup must not add more."""
-    plan = plan_of(spark, sf_dir, "doc_segment_dedup")
+    plan = key_plan("doc_segment_dedup").plan
     assert plan.count("Exchange hashpartitioning") <= 2
     assert plan.count("Window [") <= 1 or plan.count("Window") >= 1
 
 
-def test_triangle_count_joins_are_equi(spark, sf_dir):
+def test_triangle_count_joins_are_equi(key_plan):
     """After the oriented-edge materialization, the wedge-closing
     self-joins must be hash/merge equi-joins (the only BNLJ is the
     declared 1-row count cross join)."""
-    plan = plan_of(spark, sf_dir, "graph_triangle_count")
+    plan = key_plan("graph_triangle_count").plan
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
 
-def test_no_undeclared_nested_loop_joins(spark, sf_dir):
+def test_no_undeclared_nested_loop_joins(key_plan):
     """Registry-wide BNLJ gate: a BroadcastNestedLoopJoin is O(n*m)
     work and only tolerable when the build side is CONSTANT-size.
     Every key allowed here has one — scalar-subquery broadcasts
@@ -432,13 +432,11 @@ def test_no_undeclared_nested_loop_joins(spark, sf_dir):
         # 1-row bucket-range stats + 1-row tie-fold broadcasts
         "stats_kruskal_wallis",
     }
-    offenders = []
-    for name in sorted(REGISTRY):
-        if name in bnlj_ok or name == "stream_watermark_dedup":
-            continue
-        plan = plan_of(spark, sf_dir, name)
-        if "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan:
-            offenders.append(name)
+    offenders = [
+        name
+        for name, kp in key_plan.every(bnlj_ok)
+        if "BroadcastNestedLoopJoin" in kp.plan or "CartesianProduct" in kp.plan
+    ]
     assert not offenders, f"undeclared nested-loop join in: {offenders}"
 
 
@@ -457,7 +455,10 @@ def test_join_multiway_builds_dims_never_facts(spark, sf_dir):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = plan_of(spark, sf_dir, "join_multiway")
+        # built here, not through key_plan: a non-default-conf plan
+        # must not enter the shared cache
+        df = REGISTRY["join_multiway"].fn(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -530,13 +531,13 @@ def test_aqe_skew_join_splits_hot_partitions(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_bloom_prune_filters_below_join_exchange(spark, sf_dir):
+def test_bloom_prune_filters_below_join_exchange(key_plan):
     """join_bloom_prune: the bloom membership test must sit BELOW the
     fact-side shuffle (that is the whole point — rows failing the
     bloom never cross the wire), the final join must be the declared
     shuffle-hash join, and the fact scan must stay pruned to the 3
     referenced columns."""
-    plan = plan_of(spark, sf_dir, "join_bloom_prune")
+    plan = key_plan("join_bloom_prune").plan
     assert "ShuffledHashJoin" in plan
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row bloom broadcast
     # tree prints parent before child: the fact-side exchange must be
@@ -548,30 +549,30 @@ def test_bloom_prune_filters_below_join_exchange(spark, sf_dir):
     assert "l_extendedprice" in read and "l_shipdate" not in read
 
 
-def test_heavy_hitters_bucket_pass_is_bounded_and_broadcast(spark, sf_dir):
+def test_heavy_hitters_bucket_pass_is_bounded_and_broadcast(key_plan):
     """agg_heavy_hitters_twopass: pass 1 must partial-aggregate the
     BOUNDED bucket key map-side (<=B rows ever shuffle) and the heavy
     bucket ids must come back as a broadcast, not a shuffle join; both
     scans must read only o_custkey."""
-    plan = plan_of(spark, sf_dir, "agg_heavy_hitters_twopass")
+    plan = key_plan("agg_heavy_hitters_twopass").plan
     assert "partial_count" in plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert plan.count("ReadSchema: struct<o_custkey:bigint>") == 2
 
 
-def test_zorder_is_codegen_bitmath_with_range_partitioning(spark, sf_dir):
+def test_zorder_is_codegen_bitmath_with_range_partitioning(key_plan):
     """sort_zorder_layout: the Morton interleave must be plain codegen
     bitwise expressions feeding a rangepartitioning exchange on the
     z-value — no Python evaluation, no extra shuffles beyond layout +
     stats."""
-    plan = plan_of(spark, sf_dir, "sort_zorder_layout")
+    plan = key_plan("sort_zorder_layout").plan
     assert "Exchange rangepartitioning(zval" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert plan.count("Exchange") <= 3  # layout + stats agg + final sort
 
 
-def test_pagerank_single_scan_and_partial_sums(spark, sf_dir):
+def test_pagerank_single_scan_and_partial_sums(key_plan):
     """graph_pagerank_unrolled: iteration state (the degree-annotated
     edge list) must be checkpointed — the final plan reads ONLY the
     materialized edge table (once per unrolled iteration; a
@@ -580,7 +581,7 @@ def test_pagerank_single_scan_and_partial_sums(spark, sf_dir):
     otherwise re-expand 4x through the unrolled lineage.
     Contributions must partial-sum map-side and the top-20 must be a
     TakeOrderedAndProject, not a global sort."""
-    plan = plan_of(spark, sf_dir, "graph_pagerank_unrolled")
+    plan = key_plan("graph_pagerank_unrolled").plan
     assert "lineitem" not in plan
     assert "FileScan" not in plan  # nothing re-reads the raw input
     assert plan.count("Scan ExistingRDD") == 2  # ed in r1 + ed in r2
@@ -588,72 +589,72 @@ def test_pagerank_single_scan_and_partial_sums(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_not_in_plans_null_aware_anti_join(spark, sf_dir):
+def test_not_in_plans_null_aware_anti_join(key_plan):
     """join_null_aware_anti: the NOT IN subquery must become a single
     null-aware broadcast anti join (the trailing `true` flag on the
     BroadcastHashJoin is Catalyst's isNullAwareAntiJoin marker), never
     a cartesian/BNLJ fallback, and the CASE-wrapped probe key must not
     block pushing the o_totalprice filter to the scan."""
-    plan = plan_of(spark, sf_dir, "join_null_aware_anti")
+    plan = key_plan("join_null_aware_anti").plan
     assert "LeftAnti, BuildRight, true" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "GreaterThan(o_totalprice,100000.0)" in plan
 
 
-def test_islands_windows_share_one_hash_exchange(spark, sf_dir):
+def test_islands_windows_share_one_hash_exchange(key_plan):
     """window_islands_value_runs: both row_number windows cluster by
     o_custkey, so HashPartitioning(custkey) must satisfy the
     (custkey, status) clustering too — ONE hash exchange feeding two
     sorts, not an exchange per window.  The only other exchange is
     the final presentation orderBy."""
-    plan = plan_of(spark, sf_dir, "window_islands_value_runs")
+    plan = key_plan("window_islands_value_runs").plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("Window") == 2
 
 
-def test_fuzzy_join_is_equi_on_deletion_variants(spark, sf_dir):
+def test_fuzzy_join_is_equi_on_deletion_variants(key_plan):
     """join_fuzzy_edit_distance: candidate generation must be a hash
     equi-join on the exploded deletion variants — no nested-loop /
     cartesian all-pairs anywhere, and the levenshtein verify must be
     codegen (no Python eval)."""
-    plan = plan_of(spark, sf_dir, "join_fuzzy_edit_distance")
+    plan = key_plan("join_fuzzy_edit_distance").plan
     assert "HashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
 
 
-def test_naaj_shuffled_rewrite_is_sort_merge_anti(spark, sf_dir):
+def test_naaj_shuffled_rewrite_is_sort_merge_anti(key_plan):
     """join_null_aware_anti_shuffled: the scalable NOT IN rewrite must
     anti-join via a shuffled SortMergeJoin (no broadcast NAAJ — that
     is the whole point), with the only broadcasts being the 1-row
     null/empty guard."""
-    plan = plan_of(spark, sf_dir, "join_null_aware_anti_shuffled")
+    plan = key_plan("join_null_aware_anti_shuffled").plan
     assert "SortMergeJoin" in plan and "LeftAnti" in plan
     assert "BuildRight, true" not in plan
 
 
-def test_asof_nearest_is_one_shuffle_no_nested_loop(spark, sf_dir):
+def test_asof_nearest_is_one_shuffle_no_nested_loop(key_plan):
     """join_asof_nearest: both directional window passes must ride ONE
     user_id hash exchange — the union-window emulation, never a range
     join or BNLJ."""
-    plan = plan_of(spark, sf_dir, "join_asof_nearest")
+    plan = key_plan("join_asof_nearest").plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_bfs_final_plan_reads_only_checkpoint(spark, sf_dir):
+def test_bfs_final_plan_reads_only_checkpoint(key_plan):
     """graph_bfs_distance: after three unrolled levels the final plan
     must read the last checkpointed distance table only — no lineitem
     rescan, no replayed edge build (the pagerank materialization
     lesson)."""
-    plan = plan_of(spark, sf_dir, "graph_bfs_distance")
+    plan = key_plan("graph_bfs_distance").plan
     assert "lineitem" not in plan
     assert "FileScan parquet" not in plan
 
 
-def test_mm_pipeline_python_touches_each_payload_once(spark, sf_dir):
+def test_mm_pipeline_python_touches_each_payload_once(key_plan):
     """mm_pipeline_e2e: the encode + fused decode/feature/hash kernels
     run ONCE, at the eager signature checkpoint — the final plan fans
     out over the checkpointed signature table (Scan ExistingRDD) with
@@ -661,14 +662,14 @@ def test_mm_pipeline_python_touches_each_payload_once(spark, sf_dir):
     JVM codegen.  (Without the lineage cut the 4-way signature fan-out
     replayed both kernels per reference: 10 MapInPandas stages,
     payloads decoded 5x.)"""
-    plan = plan_of(spark, sf_dir, "mm_pipeline_e2e")
+    plan = key_plan("mm_pipeline_e2e").plan
     assert plan.count("MapInPandas") == 0
     assert "Scan ExistingRDD" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_mm_curation_pipeline_stays_jvm_after_signature(spark, sf_dir):
+def test_mm_curation_pipeline_stays_jvm_after_signature(key_plan):
     """mm_curation_pipeline_e2e: same kernel-once contract as
     mm_pipeline_e2e (final plan fans out over the eager signature
     checkpoint, zero Python stages), plus the composite's own shape
@@ -676,7 +677,7 @@ def test_mm_curation_pipeline_stays_jvm_after_signature(spark, sf_dir):
     (no extra exchange before the band join) and the only
     range-partitioning-free shuffles downstream are the band-join
     hash exchange and the per-shard packing window."""
-    plan = plan_of(spark, sf_dir, "mm_curation_pipeline_e2e")
+    plan = key_plan("mm_curation_pipeline_e2e").plan
     assert plan.count("MapInPandas") == 0
     assert "Scan ExistingRDD" in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -687,13 +688,13 @@ def test_mm_curation_pipeline_stays_jvm_after_signature(spark, sf_dir):
     assert "hashpartitioning(shard" in plan, plan
 
 
-def test_mm_video_dedup_stays_jvm_after_kernel(spark, sf_dir):
+def test_mm_video_dedup_stays_jvm_after_kernel(key_plan):
     """mm_frame_sample_video: exactly two Python stages (AVI synth +
     demux/hash kernel — payload touches Python once each way), and
     the temporal dedup downstream is pure JVM: the lag window keys on
     doc_id (hash exchange per video, never a global shuffle of frame
     rows before the window)."""
-    plan = plan_of(spark, sf_dir, "mm_frame_sample_video")
+    plan = key_plan("mm_frame_sample_video").plan
     assert plan.count("MapInPandas") == 2, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "hashpartitioning(doc_id" in plan, plan
@@ -710,19 +711,23 @@ def test_mm_video_dedup_stays_jvm_after_kernel(spark, sf_dir):
 # declared semantics include ordering (TPC-H shapes, top-k, sort
 # showcases) keep theirs and are NOT listed here.  Row-scale keys added
 # later join the list from their first commit.
-def test_row_scale_keys_have_no_global_sort_anywhere(spark, sf_dir):
+def test_row_scale_keys_have_no_global_sort_anywhere(key_plan):
     """No row-count-scale key may contain a range-partitioning exchange
     ANYWHERE in its physical plan.  Guards the round-8 sweep against
     regression — a new trailing orderBy on any of these re-introduces a
     full-output shuffle that grows with the corpus.  Hardened per the
     round-8 ADVICE: the old gate only inspected the TOP operator of the
     optimized logical plan, so ``orderBy(...).select(...)`` left a
-    Project above the Sort and evaded it.  The physical plan can't be
-    fooled that way — a global sort compiles to ``Exchange
-    rangepartitioning`` wherever it sits — while the bounded top-K
-    shapes these keys ARE allowed (``orderBy().limit()`` →
-    TakeOrderedAndProject, e.g. tokenizer_vocab_coverage's vocab cut)
-    plan with no range exchange at all."""
+    Project above the Sort and evaded it.  The executed plan from the
+    shared plan pass (``key_plan``) can't be fooled that way — a
+    global sort compiles to ``Exchange rangepartitioning`` wherever it
+    sits; ``sparkPlan()``, read before ``EnsureRequirements`` adds the
+    exchanges, shows only a bare ``Sort`` and would pass anything
+    (test_sort_free_gate_sees_a_trailing_order_by pins this) — while
+    the bounded top-K shapes these keys ARE allowed
+    (``orderBy().limit()`` → TakeOrderedAndProject, e.g.
+    tokenizer_vocab_coverage's vocab cut) plan with no range exchange
+    at all."""
     sort_free = (
         "agg_having", "array_set_algebra", "attribution_last_touch",
         "cdc_apply_tombstones", "dedup_exact",
@@ -772,46 +777,52 @@ def test_row_scale_keys_have_no_global_sort_anywhere(spark, sf_dir):
         "window_moving_zscore", "window_pattern_match",
         "window_rolling_median", "window_time_decay",
     )
-    offenders = []
-    for name in sort_free:
-        df = REGISTRY[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().sparkPlan().toString()
-        if "rangepartitioning" in plan:
-            offenders.append(name)
+    offenders = [
+        name for name in sort_free if "rangepartitioning" in key_plan(name).plan
+    ]
     assert not offenders, (
         "global-sort range shuffle re-introduced on row-scale keys: "
         f"{offenders}"
     )
 
 
-def test_orphan_audit_preaggregates_no_expand(spark, sf_dir):
+def test_sort_free_gate_sees_a_trailing_order_by(spark, key_plan):
+    """The sort-free gate's plan text must show a global sort hidden
+    under a Project: ``orderBy(...).select(...)`` plans a range
+    exchange in the executed plan, and the gate reads plans exactly as
+    ``key_plan.of`` renders this one."""
+    df = spark.range(100).selectExpr("id % 7 AS k", "id").orderBy("k").select("id")
+    assert "rangepartitioning" in key_plan.of(df).plan
+
+
+def test_orphan_audit_preaggregates_no_expand(key_plan):
     """Round-13: dq_referential_orphans pre-aggregates each fact by
     its FK before the dim join, so no COUNT(DISTINCT) Expand remains —
     the old plan tripled every fact row through Expand three times
     (once per relationship).  Key-level join probes keep the 100 TB
     join input at |distinct keys|, not |fact rows|."""
-    plan = plan_of(spark, sf_dir, "dq_referential_orphans")
+    plan = key_plan("dq_referential_orphans").plan
     assert "Expand" not in plan
     # three relationships, each with a partial+final pre-aggregate
     assert plan.count("HashAggregate") >= 6
 
 
-def test_ngram_novelty_window_df_no_join(spark, sf_dir):
+def test_ngram_novelty_window_df_no_join(key_plan):
     """Round-13: document frequency rides a window count over the
     trigram key instead of a groupBy + join-back that replayed the
     shingle subtree on both join sides — the plan has exactly one
     shingle explode and no join at all."""
-    plan = plan_of(spark, sf_dir, "text_ngram_novelty")
+    plan = key_plan("text_ngram_novelty").plan
     assert "Join" not in plan
     assert "Window" in plan
     assert plan.count("Generate explode") == 1
 
 
-def test_decontaminate_hashes_tokens_in_codegen(spark, sf_dir):
+def test_decontaminate_hashes_tokens_in_codegen(key_plan):
     """Round-13: the 8-gram key is a multi-argument xxhash64 over the
     eight tokens in whole-stage codegen; the interpreted transform()
     lambda (and the assembled n-gram string) are gone from the plan."""
-    plan = plan_of(spark, sf_dir, "decontaminate_ngram_overlap")
+    plan = key_plan("decontaminate_ngram_overlap").plan
     assert "xxhash64" in plan
     assert "transform(" not in plan
     assert "concat_ws" not in plan
