@@ -9,8 +9,9 @@ blueprints that list/match/download/upload/move/remove S3 objects
   (reference: download_file.py:59-71 ``set_environment_variables``).
 - ``s3spark.naming``    — key/name manipulation semantics
   (reference: download_file.py:85-164, upload_file.py:92-171).
-- ``s3spark.fs``        — listing / match / ingest / publish / move / remove
-  verbs over Hadoop FileSystem (reference: the four main() loops).
+- ``s3spark.fs``        — listing / match and the verbs ``transfer``
+  (download, upload, move) and ``remove`` over Hadoop FileSystem
+  (reference: the four main() loops).
 - ``s3spark.errors``    — typed errors carrying the reference exit codes
   (reference: exit_codes.py:1-3).
 - ``s3spark.queries``   — the engine operator surface (SURVEY.md §2.3):

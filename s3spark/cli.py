@@ -116,6 +116,17 @@ def build_parser() -> argparse.ArgumentParser:
     return parser
 
 
+# file subcommand -> S3Pipeline method.  build_parser gives each flag
+# of a file subcommand the dest of the method keyword it feeds.
+FILE_VERBS = {"download": "ingest", "upload": "publish", "move": "move", "remove": "remove"}
+# the S3Pipeline constructor's keywords
+CREDENTIAL_DESTS = (
+    "aws_access_key_id", "aws_secret_access_key", "aws_default_region", "s3_endpoint"
+)
+# dests that pick the subcommand or configure the session, not a verb
+NON_VERB_DESTS = ("verb", *CREDENTIAL_DESTS, "s3_config", "extra_args")
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     from s3spark.s3config import extra_args_to_hadoop, s3_config_to_hadoop
@@ -127,50 +138,12 @@ def main(argv: list[str] | None = None) -> int:
         print(f"s3spark: invalid --s3-config/--extra-args literal: {e}", file=sys.stderr)
         return 1
     pipe = S3Pipeline(
-        aws_access_key_id=getattr(args, "aws_access_key_id", None),
-        aws_secret_access_key=getattr(args, "aws_secret_access_key", None),
-        aws_default_region=getattr(args, "aws_default_region", None),
-        s3_endpoint=getattr(args, "s3_endpoint", None),
-        hadoop_conf=hadoop_conf,
+        **{k: getattr(args, k, None) for k in CREDENTIAL_DESTS}, hadoop_conf=hadoop_conf
     )
     try:
-        if args.verb == "download":
-            res = pipe.ingest(
-                bucket_name=args.bucket_name,
-                source_file_name=args.source_file_name,
-                source_folder_name=args.source_folder_name,
-                source_file_name_match_type=args.source_file_name_match_type,
-                destination_url=args.destination_url,
-                destination_folder_name=args.destination_folder_name,
-                destination_file_name=args.destination_file_name,
-            )
-        elif args.verb == "upload":
-            res = pipe.publish(
-                bucket_name=args.bucket_name,
-                source_url=args.source_url,
-                source_file_name=args.source_file_name,
-                source_folder_name=args.source_folder_name,
-                source_file_name_match_type=args.source_file_name_match_type,
-                destination_folder_name=args.destination_folder_name,
-                destination_file_name=args.destination_file_name,
-            )
-        elif args.verb == "move":
-            res = pipe.move(
-                source_bucket_name=args.source_bucket_name,
-                destination_bucket_name=args.destination_bucket_name,
-                source_file_name=args.source_file_name,
-                source_folder_name=args.source_folder_name,
-                source_file_name_match_type=args.source_file_name_match_type,
-                destination_folder_name=args.destination_folder_name,
-                destination_file_name=args.destination_file_name,
-            )
-        elif args.verb == "remove":
-            res = pipe.remove(
-                bucket_name=args.bucket_name,
-                source_file_name=args.source_file_name,
-                source_folder_name=args.source_folder_name,
-                source_file_name_match_type=args.source_file_name_match_type,
-            )
+        if args.verb in FILE_VERBS:
+            kwargs = {k: v for k, v in vars(args).items() if k not in NON_VERB_DESTS}
+            res = getattr(pipe, FILE_VERBS[args.verb])(**kwargs)
         elif args.verb == "list":
             pipe.list(args.bucket_name, args.source_folder_name).show(
                 100, truncate=False

@@ -1,5 +1,6 @@
-"""File-capability layer: listing, matching, and the four verbs
-(ingest / publish / move / remove) over Hadoop FileSystem.
+"""File-capability layer: listing, matching, and the four reference
+verbs as two functions over Hadoop FileSystem: :func:`transfer`
+(download, upload, and move with ``delete_source``) and :func:`remove`.
 
 This is the Spark-native re-expression of the reference's entire
 control surface (SURVEY.md §2.1):
@@ -8,9 +9,8 @@ control surface (SURVEY.md §2.1):
                    remove_files.py:83-93, upload_file.py:174-182)
 - regex/exact match — R9/R10 (download_file.py:220-229 + exact branches)
 - destination projection — R11-R16 (via s3spark.naming)
-- ingest (≈download, R17 download_file.py:232-246)
-- publish (≈upload, R18 upload_file.py:197-216)
-- move (copy+delete, R19 move_file.py:125-154)
+- transfer (≈download, R17 download_file.py:232-246; ≈upload, R18
+  upload_file.py:197-216; copy+delete move, R19 move_file.py:125-154)
 - remove (R20 remove_files.py:96-116)
 
 Design: every listing is one walk, :func:`_walk`.  A small JVM helper
@@ -573,30 +573,6 @@ def _collect_matches(
     return paths
 
 
-def _plan_destinations(
-    paths: list[str],
-    dest_url: str,
-    dest_folder: str,
-    dest_file: str | None,
-) -> list[tuple[str, str]]:
-    """(source, destination) pairs with reference naming semantics:
-    explicit name enumerated iff >1 match (D4), else source basename.
-    ``paths`` comes sorted from :func:`_collect_matches`, which fixes
-    the ``name_i`` numbering."""
-    folder = naming.clean_folder_name(dest_folder)
-    many = len(paths) > 1
-    out = []
-    for i, src in enumerate(paths, start=1):
-        name = naming.destination_file_name(
-            source_full_path=src,
-            dest_file_name=dest_file,
-            file_number=i if (dest_file and many) else None,
-        )
-        key = naming.combine_folder_and_file_name(folder, name) if folder else name
-        out.append((src, f"{dest_url.rstrip('/')}/{key}"))
-    return out
-
-
 # -------------------------------------------------------------------- verbs
 
 
@@ -671,7 +647,7 @@ def _each_file(pairs: list, step) -> None:
             raise err from e
 
 
-def ingest(
+def transfer(
     spark: SparkSession,
     *,
     source_url: str,
@@ -681,60 +657,29 @@ def ingest(
     dest_url: str,
     dest_folder: str = "",
     dest_file: str | None = None,
+    delete_source: bool = False,
 ) -> VerbResult:
-    """≈ reference download (R17): remote → local byte copy per match."""
+    """One Hadoop copy per match: reference download (R17) and upload
+    (R18), and with ``delete_source`` move (R19).  Hadoop FileSystem is
+    symmetric, so a direction is only a pair of URLs (multipart via
+    fs.s3a.*).
+
+    Destinations follow the reference's R16 naming
+    (:func:`naming.destination_full_path`): an explicit ``dest_file``
+    is enumerated iff >1 match (D4), else the source basename is kept;
+    the sorted matches fix the ``name_i`` numbering.  A move is
+    copy + delete per file, non-atomic exactly like S3 COPY+DELETE
+    (move_file.py:125-154): a failure at file k leaves files k..N at
+    the source and reports files 1..k-1 as ``completed``."""
     paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
-    pairs = _plan_destinations(paths, dest_url, dest_folder, dest_file)
+    root, many = dest_url.rstrip("/"), len(paths) > 1
+    pairs = []
+    for i, src in enumerate(paths, start=1):
+        key = naming.destination_full_path(dest_folder, dest_file, src, i if many else None)
+        pairs.append((src, f"{root}/{key}"))
     made: set[str] = set()
-    _each_file(pairs, lambda p: _copy(spark, p[0], p[1], False, made))
-    return VerbResult(files=list(pairs))
-
-
-def publish(
-    spark: SparkSession,
-    *,
-    source_url: str,
-    source_file: str,
-    source_folder: str = "",
-    match_type: str = EXACT_MATCH,
-    dest_url: str,
-    dest_folder: str = "",
-    dest_file: str | None = None,
-) -> VerbResult:
-    """≈ reference upload (R18): local → remote. Same engine path as
-    ingest — Hadoop FileSystem is symmetric (multipart via fs.s3a.*)."""
-    return ingest(
-        spark,
-        source_url=source_url,
-        source_file=source_file,
-        source_folder=source_folder,
-        match_type=match_type,
-        dest_url=dest_url,
-        dest_folder=dest_folder,
-        dest_file=dest_file,
-    )
-
-
-def move(
-    spark: SparkSession,
-    *,
-    source_url: str,
-    source_file: str,
-    source_folder: str = "",
-    match_type: str = EXACT_MATCH,
-    dest_url: str,
-    dest_folder: str = "",
-    dest_file: str | None = None,
-) -> VerbResult:
-    """≈ reference move (R19): copy + delete per match, cross-"bucket",
-    non-atomic exactly like S3 COPY+DELETE (move_file.py:125-154).  A
-    failure at file k leaves files k..N at the source and reports
-    files 1..k-1 as ``completed``."""
-    paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
-    pairs = _plan_destinations(paths, dest_url, dest_folder, dest_file)
-    made: set[str] = set()
-    _each_file(pairs, lambda p: _copy(spark, p[0], p[1], True, made))
-    return VerbResult(files=list(pairs))
+    _each_file(pairs, lambda p: _copy(spark, p[0], p[1], delete_source, made))
+    return VerbResult(files=pairs)
 
 
 def remove(

@@ -74,7 +74,7 @@ class S3Pipeline:
         destination_file_name: str | None = None,
     ) -> fs.VerbResult:
         """≈ reference download (download_file.py:249-297)."""
-        return fs.ingest(
+        return fs.transfer(
             self.spark,
             source_url=_as_url(bucket_name),
             source_folder=source_folder_name,
@@ -97,7 +97,7 @@ class S3Pipeline:
         destination_file_name: str | None = None,
     ) -> fs.VerbResult:
         """≈ reference upload (upload_file.py:219-271)."""
-        return fs.publish(
+        return fs.transfer(
             self.spark,
             source_url=_as_url(source_url),
             source_folder=source_folder_name,
@@ -121,7 +121,7 @@ class S3Pipeline:
     ) -> fs.VerbResult:
         """≈ reference move (move_file.py:156-234): copy+delete,
         cross-bucket, non-atomic (same as S3 COPY+DELETE)."""
-        return fs.move(
+        return fs.transfer(
             self.spark,
             source_url=_as_url(source_bucket_name),
             source_folder=source_folder_name,
@@ -130,6 +130,7 @@ class S3Pipeline:
             dest_url=_as_url(destination_bucket_name),
             dest_folder=destination_folder_name,
             dest_file=destination_file_name,
+            delete_source=True,
         )
 
     def remove(

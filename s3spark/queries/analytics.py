@@ -5,7 +5,7 @@ operator *composition*, which is where planners break.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s3spark.io import dsum, sql_dsum, table

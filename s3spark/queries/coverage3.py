@@ -5,8 +5,6 @@ join-type / source-format / scalar matrices.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

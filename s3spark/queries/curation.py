@@ -5,8 +5,6 @@ cleaned corpus and batched training shards.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 

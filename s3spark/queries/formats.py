@@ -13,8 +13,6 @@ the layout that matters at 100 TB (directory partition pruning).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -25,7 +25,6 @@ per the analytics + training-data mandate.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from s3spark.io import scratch_dir, table
 from s3spark.registry import register

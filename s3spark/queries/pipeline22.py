@@ -26,7 +26,7 @@ has no relational surface; extends SURVEY.md §2.3 sections D/J.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s3spark.io import table

@@ -5,8 +5,6 @@ whether the 100 TB plan reads/shuffles 10× more than it must.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -5,8 +5,6 @@ ops that decide whether a 100 TB pipeline survives real data.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

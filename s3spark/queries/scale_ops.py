@@ -8,7 +8,6 @@ all keys oracle-verified.
 
 from __future__ import annotations
 
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window

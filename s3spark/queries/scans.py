@@ -8,8 +8,6 @@ physical plan — asserted in tests/test_plans.py).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -34,9 +34,12 @@ def get_spark(
 
     Credential precedence mirrors the reference (explicit args override
     ambient env, download_file.py:59-71); unset values fall through to
-    the S3A default provider chain.
+    the S3A default provider chain.  ``master`` defaults to
+    ``local[$SPARK_GRAFT_CPUS]`` and ``shuffle_partitions`` to the same
+    count; with the variable unset, to the cores this process may run
+    on (what ``nproc`` prints).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
@@ -44,7 +47,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Spark 4.1.2 turned on checkpoint file checksums by default

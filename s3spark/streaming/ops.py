@@ -14,7 +14,6 @@ the object store next to the data.
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from s3spark.cli import main
+from s3spark.cli import FILE_VERBS, NON_VERB_DESTS, build_parser, main
 
 
 @pytest.fixture()
@@ -184,3 +184,21 @@ def test_cli_move_failure_prints_completed_prefix(
     assert not (bucket / "data" / "a.csv").exists()
     assert (bucket / "data" / "b.csv").exists()
     assert (bucket / "data" / "notes.txt").exists()
+
+
+@pytest.mark.parametrize("sub", sorted(FILE_VERBS))
+def test_file_subcommand_dests_are_the_pipeline_keywords(sub):
+    """main passes a file subcommand's parsed flags to its S3Pipeline
+    method by dest, so the parser's dests other than the subcommand,
+    credential and config ones are exactly that method's keywords."""
+    import argparse
+    import inspect
+
+    from s3spark.pipeline import S3Pipeline
+
+    subparsers = next(
+        a for a in build_parser()._actions if isinstance(a, argparse._SubParsersAction)
+    )
+    dests = {a.dest for a in subparsers.choices[sub]._actions} - {"help", *NON_VERB_DESTS}
+    params = inspect.signature(getattr(S3Pipeline, FILE_VERBS[sub])).parameters
+    assert dests == {n for n, p in params.items() if p.kind is p.KEYWORD_ONLY}

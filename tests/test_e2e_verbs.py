@@ -77,7 +77,7 @@ def test_verbs_stage_query_publish_teardown(spark, staged, tmp_path):
     out = REGISTRY["agg_groupby"].fn(spark, url(stage_dir))
     raw_dir = staged / "raw_out"
     out.coalesce(1).write.mode("overwrite").parquet(url(raw_dir))
-    moved = fs.move(
+    moved = fs.transfer(
         spark,
         source_url=url(raw_dir),
         source_folder="",
@@ -86,6 +86,7 @@ def test_verbs_stage_query_publish_teardown(spark, staged, tmp_path):
         dest_url=url(tmp_path),
         dest_folder="published",
         dest_file="q1_summary.parquet",
+        delete_source=True,
     )
     assert moved.count == 1
     pub = spark.read.parquet(url(staged / "published" / "q1_summary.parquet"))

@@ -111,9 +111,9 @@ def test_verb_bad_regex_is_203_after_a_missing_prefix_201(spark, bucket, tmp_pat
     """The verbs list before they match, like the reference: a bad
     pattern raises 203, but on a missing prefix 201 comes first."""
     def ingest(folder):
-        fs.ingest(spark, source_url=url(bucket), source_folder=folder,
-                  source_file="[unclosed", match_type=fs.REGEX_MATCH,
-                  dest_url=url(tmp_path / "out"))
+        fs.transfer(spark, source_url=url(bucket), source_folder=folder,
+                    source_file="[unclosed", match_type=fs.REGEX_MATCH,
+                    dest_url=url(tmp_path / "out"))
 
     with pytest.raises(S3InvalidRegex):
         ingest("src")
@@ -123,7 +123,7 @@ def test_verb_bad_regex_is_203_after_a_missing_prefix_201(spark, bucket, tmp_pat
 
 def test_ingest_exact_match(spark, bucket, tmp_path):
     out = tmp_path / "out"
-    res = fs.ingest(
+    res = fs.transfer(
         spark,
         source_url=url(bucket),
         source_folder="src",
@@ -137,7 +137,7 @@ def test_ingest_exact_match(spark, bucket, tmp_path):
 
 def test_ingest_exact_missing_raises_201(spark, bucket, tmp_path):
     with pytest.raises(S3FileNotFound):
-        fs.ingest(
+        fs.transfer(
             spark,
             source_url=url(bucket),
             source_folder="src",
@@ -152,7 +152,7 @@ def test_ingest_regex_enumerates_explicit_name_only_when_multiple(
 ):
     out = tmp_path / "out"
     # two matches + explicit dest name → enumerated before first dot (D4)
-    res = fs.ingest(
+    res = fs.transfer(
         spark,
         source_url=url(bucket),
         source_folder="src",
@@ -171,7 +171,7 @@ def test_ingest_regex_enumerates_explicit_name_only_when_multiple(
 
 def test_ingest_single_match_no_enumeration(spark, bucket, tmp_path):
     out = tmp_path / "out"
-    fs.ingest(
+    fs.transfer(
         spark,
         source_url=url(bucket),
         source_folder="src",
@@ -185,7 +185,7 @@ def test_ingest_single_match_no_enumeration(spark, bucket, tmp_path):
 
 def test_ingest_no_dest_name_keeps_basenames(spark, bucket, tmp_path):
     out = tmp_path / "out"
-    fs.ingest(
+    fs.transfer(
         spark,
         source_url=url(bucket / "src"),
         source_file=r"\.csv$",
@@ -197,9 +197,31 @@ def test_ingest_no_dest_name_keeps_basenames(spark, bucket, tmp_path):
     assert sorted(os.listdir(out)) == ["data_a.csv", "data_b.csv"]
 
 
+@pytest.mark.parametrize(
+    "dest_file, on_disk", [("x.csv", "x.csv"), ("./x.csv", "x.csv"), ("sub//y.csv", "sub/y.csv")]
+)
+def test_reported_destination_is_the_written_path_without_folder(
+    spark, bucket, tmp_path, dest_file, on_disk
+):
+    """With no destination folder the reported destination is the
+    normalized key Hadoop writes (R15/R16), as it is with a folder."""
+    out = tmp_path / "out"
+    res = fs.transfer(
+        spark,
+        source_url=url(bucket),
+        source_folder="src",
+        source_file="archive.tar.gz",
+        match_type=fs.EXACT_MATCH,
+        dest_url=url(out),
+        dest_file=dest_file,
+    )
+    assert res.files == [(f"{url(bucket)}/src/archive.tar.gz", url(out / on_disk))]
+    assert (out / on_disk).read_text() == "one"
+
+
 def test_zero_matches_raises_exit_1(spark, bucket, tmp_path):
     with pytest.raises(S3NoMatches) as ei:
-        fs.ingest(
+        fs.transfer(
             spark,
             source_url=url(bucket),
             source_folder="src",
@@ -212,7 +234,7 @@ def test_zero_matches_raises_exit_1(spark, bucket, tmp_path):
 
 def test_move_copies_then_deletes_source(spark, bucket, tmp_path):
     dest = tmp_path / "bucket2"
-    res = fs.move(
+    res = fs.transfer(
         spark,
         source_url=url(bucket),
         source_folder="src",
@@ -220,6 +242,7 @@ def test_move_copies_then_deletes_source(spark, bucket, tmp_path):
         match_type=fs.REGEX_MATCH,
         dest_url=url(dest),
         dest_folder="moved",
+        delete_source=True,
     )
     assert res.count == 2  # src/data_a.csv and src/a/data_a.csv
     assert not (bucket / "src" / "data_a.csv").exists()
@@ -391,7 +414,7 @@ def test_verbs_accept_python_named_groups(spark, bucket, tmp_path):
     """The verbs match with Python re, the reference's own matcher, so
     a pattern the reference accepts works — here a named group."""
     out = tmp_path / "out"
-    res = fs.ingest(
+    res = fs.transfer(
         spark,
         source_url=url(bucket),
         source_folder="src",
@@ -413,7 +436,7 @@ def test_verbs_keep_hidden_names(spark, tmp_path):
     for n in ("_meta.csv", ".hidden.csv", "plain.csv"):
         (src / n).write_text(n)
     out = tmp_path / "out"
-    res = fs.ingest(
+    res = fs.transfer(
         spark,
         source_url=url(src),
         source_file=r"\.csv$",
@@ -505,13 +528,14 @@ def test_move_failure_mid_verb_is_typed_with_completed_prefix(
 
     monkeypatch.setattr(fs, "_copy", flaky)
     with pytest.raises(S3InvalidCredentials) as ei:
-        fs.move(
+        fs.transfer(
             spark,
             source_url=url(bucket),
             source_folder="src",
             source_file=r"\.csv$",
             match_type=fs.REGEX_MATCH,
             dest_url=url(tmp_path / "dest"),
+            delete_source=True,
         )
     err = ei.value
     assert err.exit_code == 202 and err.planned == 3

@@ -71,19 +71,21 @@ def test_listing_costs_constant_round_trips(spark, tmp_path):
     assert len(fs.list_paths(spark, url(big))) == 1000
 
 
-@pytest.mark.parametrize("verb", ["ingest", "move"])
-def test_copy_round_trips_per_file(spark, tmp_path, verb):
+# ids name the S3Pipeline verbs each value serves
+@pytest.mark.parametrize("delete_source", [False, True], ids=["ingest", "move"])
+def test_copy_round_trips_per_file(spark, tmp_path, delete_source):
     def run(n, tag):
         src = _tree(tmp_path / f"src{tag}", n)
         return _calls(
             spark,
-            lambda: getattr(fs, verb)(
+            lambda: fs.transfer(
                 spark,
                 source_url=url(src),
                 source_file=r"\.csv$",
                 match_type=fs.REGEX_MATCH,
                 dest_url=url(tmp_path / f"dst{tag}"),
                 dest_folder="out",
+                delete_source=delete_source,
             ),
         )
 
@@ -118,11 +120,11 @@ def _jobs(spark) -> set:
 def test_regex_verbs_start_no_spark_job(spark, tmp_path):
     src = _tree(tmp_path / "src", 6)
     before = _jobs(spark)
-    fs.ingest(spark, source_url=url(src), source_file=r"f000[0-3]",
-              match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / "dl"))
-    fs.move(spark, source_url=url(src), source_file=r"f000[0-1]",
-            match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / "mv"),
-            dest_file="batch.csv")
+    fs.transfer(spark, source_url=url(src), source_file=r"f000[0-3]",
+                match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / "dl"))
+    fs.transfer(spark, source_url=url(src), source_file=r"f000[0-1]",
+                match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / "mv"),
+                dest_file="batch.csv", delete_source=True)
     fs.remove(spark, source_url=url(src), source_file=r"\.csv$",
               match_type=fs.REGEX_MATCH)
     assert _jobs(spark) == before

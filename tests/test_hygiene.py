@@ -9,6 +9,8 @@
    silently failing key can never ship inside a green round.
 3. Importing the query package reads no run record and registers
    keys in plain module order.
+4. No module in s3spark/, tests/ or scripts/ keeps an unused top-level
+   import (no linter is installed, so the AST check lives here).
 """
 
 from __future__ import annotations
@@ -213,3 +215,44 @@ def test_every_key_output_schema_is_driver_hashable(key_plan):
     assert not offenders, (
         "driver-unhashable nested output columns:\n" + "\n".join(offenders)
     )
+
+
+def _unused_imports(path):
+    """(line, name) of each top-level import whose bound name appears
+    nowhere else in the module as a name or a parameter; ``__future__``
+    imports and statements marked ``# noqa`` are exempt."""
+    with open(path, encoding="utf-8") as fh:
+        source = fh.read()
+    tree = ast.parse(source)
+    lines = source.splitlines()
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        elif isinstance(node, ast.arg):  # a fixture imported for pytest
+            used.add(node.arg)
+    found = []
+    for stmt in tree.body:
+        if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+            continue
+        if any("# noqa" in line for line in lines[stmt.lineno - 1 : stmt.end_lineno]):
+            continue
+        for alias in stmt.names:
+            name = alias.asname or alias.name.split(".")[0]
+            if name != "*" and name not in used:
+                found.append((stmt.lineno, name))
+    return found
+
+
+def test_no_unused_top_level_imports():
+    offenders = []
+    for top in ("s3spark", "tests", "scripts"):
+        for root, _dirs, files in os.walk(os.path.join(_REPO, top)):
+            for fn in sorted(files):
+                if fn.endswith(".py"):
+                    path = os.path.join(root, fn)
+                    rel = os.path.relpath(path, _REPO)
+                    offenders += [f"{rel}:{i}: {n}" for i, n in _unused_imports(path)]
+    assert not offenders, "unused top-level imports:\n" + "\n".join(offenders)

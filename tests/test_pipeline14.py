@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import hashlib
 import re
-from collections import Counter, defaultdict
+from collections import Counter
 
 import numpy as np
 import pandas as pd

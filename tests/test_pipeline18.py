@@ -9,7 +9,6 @@ import hashlib
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
-from pyspark.sql import functions as F
 
 import s3spark.queries  # noqa: F401  (registers everything)
 from s3spark.registry import REGISTRY

@@ -9,7 +9,6 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 import s3spark.queries  # noqa: F401  (registers everything)

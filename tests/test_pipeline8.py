@@ -9,7 +9,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
 import s3spark.queries  # noqa: F401  (registers everything)

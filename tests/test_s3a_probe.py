@@ -81,7 +81,7 @@ def test_s3a_roundtrip_against_moto(spark, tmp_path):
         got = fs.match_files(listing, r"^in/data_\d\.csv$")
         assert got.count() == 3  # key-relative anchored regex
 
-        res = fs.ingest(
+        res = fs.transfer(
             spark,
             source_url="s3a://engine-test",
             source_folder="in",
@@ -90,7 +90,7 @@ def test_s3a_roundtrip_against_moto(spark, tmp_path):
             dest_url=f"file://{tmp_path}",
         )
         assert res.count == 3
-        res = fs.move(
+        res = fs.transfer(
             spark,
             source_url="s3a://engine-test",
             source_folder="in",
@@ -98,6 +98,7 @@ def test_s3a_roundtrip_against_moto(spark, tmp_path):
             match_type=fs.EXACT_MATCH,
             dest_url="s3a://engine-test",
             dest_folder="archive",
+            delete_source=True,
         )
         assert res.count == 1
         fs.remove(

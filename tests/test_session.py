@@ -33,6 +33,35 @@ def test_scale_posture_conf(spark):
     )
 
 
+def test_default_master_and_partitions_follow_usable_cores():
+    """With SPARK_GRAFT_CPUS unset, a fresh get_spark() runs local[n]
+    with n shuffle partitions, n being the cores this process may run
+    on (what nproc prints)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    probe = (
+        "import json; from s3spark.session import get_spark; "
+        "s = get_spark(extra_conf={'spark.ui.enabled': 'false'}); "
+        "print(json.dumps([s.sparkContext.master, "
+        "s.conf.get('spark.sql.shuffle.partitions')])); s.stop()"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=300,
+    )
+    n = len(os.sched_getaffinity(0))
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == [f"local[{n}]", str(n)]
+
+
 def test_events_table_tolerates_all_timestamp_physical_types(spark, tmp_path):
     """events_table must serve the same rows whether a generator wrote
     ts as TIMESTAMP(MICROS) (direct read, ntz->ltz normalized) or
