@@ -10,7 +10,7 @@ control surface (SURVEY.md §2.1):
 - regex/exact match — R9/R10 (download_file.py:220-229 + exact branches)
 - destination projection — R11-R16 (via s3spark.naming)
 - transfer (≈download, R17 download_file.py:232-246; ≈upload, R18
-  upload_file.py:197-216; copy+delete move, R19 move_file.py:125-154)
+  upload_file.py:197-216; move, R19 move_file.py:125-154)
 - remove (R20 remove_files.py:96-116)
 
 Design: every listing is one walk, :func:`_walk`.  A small JVM helper
@@ -24,12 +24,16 @@ per file to load permissions nobody reads.
 
 The verbs plan on the driver: one walk, Python ``re.search`` over the
 store-relative key (the reference's own matcher, download_file.py:226),
-a Python sort, then one Hadoop copy or delete per file through JVM
-handles resolved once per session (:class:`_Jvm`).  They start no
-Spark job.  The *matched-file set as a DataFrame* (SURVEY.md §3.2)
-is the listing API's design: :func:`list_files`,
-:func:`list_files_auto` (driver table, or a distributed ``binaryFile``
-scan past a threshold) and :func:`match_files`.  The driver table is a
+a Python sort, then per file a Hadoop delete or one call to the
+helper's ``copy``, through JVM handles resolved once per session
+(:class:`_Jvm`).  That copy writes a ``file:`` destination with NIO
+and makes a move within one ``file:`` store a rename, because Hadoop's
+``create`` forks processes per file there; other stores keep Hadoop's
+``FileUtil.copy``.  The verbs start no Spark job.  The *matched-file
+set as a DataFrame* (SURVEY.md §3.2) is the listing API's design:
+:func:`list_files`, :func:`list_files_auto` (driver table, or a
+distributed ``binaryFile`` scan past a threshold) and
+:func:`match_files`.  The driver table is a
 JVM ``LocalRelation`` built by the same helper in one py4j call
 (:func:`local_table`): Catalyst folds the match filter and a
 ``select`` into a ``LocalTableScan``, so listing, matching and
@@ -131,9 +135,14 @@ def _disable_checksums(fs) -> None:
             raise classified from e
 
 
+# Hadoop raises the first for a missing path, NIO (the helper's file:
+# writes and renames) the second.
+_NOT_FOUND_CLASSES = ("java.io.FileNotFoundException", "java.nio.file.NoSuchFileException")
+
+
 def _is_not_found(exc: Exception) -> bool:
     return isinstance(exc, Py4JJavaError) and (
-        exc.java_exception.getClass().getName() == "java.io.FileNotFoundException"
+        exc.java_exception.getClass().getName() in _NOT_FOUND_CLASSES
     )
 
 
@@ -152,13 +161,21 @@ _FS_KEY_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.\-]*):(?://([^/]*))?")
 # cap a RemoteIterator, read FileStatus fields or build a Row without a
 # round trip per entry.
 _LISTER_JAVA = r"""
+import java.io.File;
 import java.io.IOException;
+import java.io.InputStream;
+import java.nio.file.Files;
+import java.nio.file.StandardCopyOption;
 import java.time.Instant;
 import java.util.ArrayDeque;
 import java.util.ArrayList;
+import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.FileSystem;
+import org.apache.hadoop.fs.FileUtil;
+import org.apache.hadoop.fs.LocalFileSystem;
 import org.apache.hadoop.fs.Path;
+import org.apache.hadoop.fs.PathIsDirectoryException;
 import org.apache.hadoop.fs.RemoteIterator;
 import org.apache.spark.sql.Dataset;
 import org.apache.spark.sql.RowFactory;
@@ -199,6 +216,57 @@ public class S3SparkLister {
         }
         if (j != 0) throw new IllegalArgumentException("text ends inside a row");
         return spark.createDataFrame(rows, schema);
+    }
+
+    /**
+     * One file of a transfer, as FileUtil.copy(..., overwrite=true) does
+     * it: a destination that is a folder receives the file inside it, and
+     * a move deletes the source.  mkParent creates the destination's
+     * parent first.  Hadoop's create on file: forks processes per file to
+     * set permissions, so a LocalFileSystem destination is written with
+     * NIO instead, and a move within that store is a rename that keeps
+     * the inode.  Returns false where FileUtil.copy does: a move whose
+     * source delete found nothing to delete.
+     */
+    public boolean copy(FileSystem sfs, String src, FileSystem dfs, String dst,
+                        boolean move, boolean mkParent, Configuration conf) throws IOException {
+        Path from = new Path(src);
+        Path to = new Path(dst);
+        FileStatus st = sfs.getFileStatus(from);
+        if (!(dfs instanceof LocalFileSystem) || st.isDirectory()) {
+            if (mkParent && !dfs.exists(to.getParent())) dfs.mkdirs(to.getParent());
+            return FileUtil.copy(sfs, st, dfs, to, move, true, conf);
+        }
+        LocalFileSystem local = (LocalFileSystem) dfs;
+        File target = local.pathToFile(to);
+        if (mkParent) Files.createDirectories(target.getParentFile().toPath());
+        if (target.isDirectory()) {
+            to = new Path(to, from.getName());
+            target = local.pathToFile(to);
+            if (target.isDirectory()) throw new PathIsDirectoryException(to.toString());
+        }
+        boolean done = true;
+        if (move && sfs == dfs) {
+            Files.move(local.pathToFile(from).toPath(), target.toPath(),
+                       StandardCopyOption.REPLACE_EXISTING);
+            dropChecksum(local, from);
+        } else {
+            InputStream in = sfs.open(from);
+            try {
+                Files.copy(in, target.toPath(), StandardCopyOption.REPLACE_EXISTING);
+            } finally {
+                in.close();
+            }
+            if (move) done = sfs.delete(from, true);
+        }
+        // a sidecar left beside the new bytes would no longer match them
+        dropChecksum(local, to);
+        return done;
+    }
+
+    /** Deletes a file's .name.crc sidecar, as ChecksumFileSystem.delete does. */
+    private static void dropChecksum(LocalFileSystem fs, Path p) throws IOException {
+        Files.deleteIfExists(fs.pathToFile(fs.getChecksumFile(p)).toPath());
     }
 
     /** The files under a root, handed out a bounded slice at a time. */
@@ -255,7 +323,8 @@ class _Jvm:
 
     Every ``jvm.org.apache...`` attribute chain costs one reflection
     round trip per dotted segment, and every static-method lookup one
-    more; resolved once, a copy costs ~3 py4j calls and a delete ~2.
+    more; resolved once, a copy costs one py4j call (the helper's
+    ``copy``) and a delete ~2.
     One checksum-disabled FileSystem is kept per (scheme, authority):
     Hadoop caches the instance itself, so only the calls around it
     are saved.
@@ -263,10 +332,8 @@ class _Jvm:
 
     def __init__(self, spark: SparkSession) -> None:
         jvm = spark._jvm
-        hfs = jvm.org.apache.hadoop.fs
         self.conf = spark._jsc.hadoopConfiguration()
-        self.Path = hfs.Path
-        self.copy = hfs.FileUtil.copy
+        self.Path = jvm.org.apache.hadoop.fs.Path
         self.compile_regex = jvm.java.util.regex.Pattern.compile
         compiler = jvm.org.codehaus.janino.SimpleCompiler()
         compiler.setParentClassLoader(self.conf.getClassLoader())
@@ -598,19 +665,15 @@ def _copy(
     delete_source: bool,
     made_parents: set[str],
 ) -> None:
-    """One Hadoop copy (and source delete when moving).  The destination
-    parent is checked and created once per distinct parent, tracked in
-    ``made_parents`` across a verb's files."""
+    """One file copied (and its source deleted when moving) by the JVM
+    helper in one py4j call.  The destination parent is created once
+    per distinct parent, tracked in ``made_parents`` across a verb's
+    files (reference makedirs, download_file.py:261-263)."""
     h = _jvm(spark)
-    sfs, dfs = h.fs(src), h.fs(dst)
     parent = dst.rsplit("/", 1)[0]
-    if parent not in made_parents:
-        made_parents.add(parent)
-        if not _ROOT_RE.match(parent):
-            jparent = h.Path(parent)
-            if not dfs.exists(jparent):
-                dfs.mkdirs(jparent)  # reference makedirs, download_file.py:261-263
-    if not h.copy(sfs, h.Path(src), dfs, h.Path(dst), delete_source, True, h.conf):
+    make_parent = parent not in made_parents and not _ROOT_RE.match(parent)
+    made_parents.add(parent)
+    if not h.lister.copy(h.fs(src), src, h.fs(dst), dst, delete_source, make_parent, h.conf):
         raise S3FileNotFound(f"copy failed: {src} -> {dst}")
 
 
@@ -667,10 +730,12 @@ def transfer(
     Destinations follow the reference's R16 naming
     (:func:`naming.destination_full_path`): an explicit ``dest_file``
     is enumerated iff >1 match (D4), else the source basename is kept;
-    the sorted matches fix the ``name_i`` numbering.  A move is
-    copy + delete per file, non-atomic exactly like S3 COPY+DELETE
-    (move_file.py:125-154): a failure at file k leaves files k..N at
-    the source and reports files 1..k-1 as ``completed``."""
+    the sorted matches fix the ``name_i`` numbering.  A move within
+    one ``file:`` store is a rename per file; any other move is copy +
+    delete per file.  Either way it runs file by file, non-atomic
+    exactly like S3 COPY+DELETE (move_file.py:125-154): a failure at
+    file k leaves files k..N at the source and reports files 1..k-1 as
+    ``completed``."""
     paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
     root, many = dest_url.rstrip("/"), len(paths) > 1
     pairs = []

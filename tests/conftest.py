@@ -5,7 +5,11 @@ from typing import Iterator, NamedTuple
 
 import pytest
 
+# The fixture scale directories.  Test modules take them from here, so
+# each follows its environment variable (a hygiene test pins it).
 SF_DIR = os.environ.get("S3SPARK_TEST_SF_DIR", "/root/testdata/sf0.01")
+SMOKE_SF_DIR = os.environ.get("S3SPARK_SMOKE_SF_DIR", "/root/testdata/sf0.001")
+E2E_SF_DIR = os.environ.get("S3SPARK_E2E_SF_DIR", "/root/testdata/sf0.1")
 
 
 @pytest.fixture(scope="session")

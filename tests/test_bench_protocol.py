@@ -21,6 +21,7 @@ import pytest
 
 import bench
 from s3spark.registry import REGISTRY
+from tests.conftest import SMOKE_SF_DIR
 
 
 class _FakeQuery:
@@ -48,7 +49,7 @@ def bench_run(spark, tmp_path, monkeypatch):
         with open(committed, "rb") as fh:
             before = fh.read()
         monkeypatch.setattr(bench, "DETAIL_PATH", str(detail))
-        monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+        monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SMOKE_SF_DIR)
         # a cold JVM can push the first sample past the 3 s rep
         # cutoff; pin it high so the mode under test is deterministic
         monkeypatch.setattr(bench, "REP_CUTOFF_S", 60.0)

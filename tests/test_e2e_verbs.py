@@ -23,8 +23,7 @@ from s3spark import fs
 from s3spark.errors import S3FileNotFound
 from s3spark.pipeline import S3Pipeline
 from s3spark.registry import REGISTRY
-
-SF01 = os.environ.get("S3SPARK_E2E_SF_DIR", "/root/testdata/sf0.1")
+from tests.conftest import E2E_SF_DIR as SF01
 
 
 def url(p):

@@ -629,3 +629,89 @@ def test_local_walk_lists_what_listfiles_lists(spark, tmp_path):
     # a single file lists as itself, like listFiles
     one = list(fs._walk(spark, url(d / "top.csv"), True))
     assert [(p.rsplit("/", 1)[1], s) for p, s, _m in one] == [("top.csv", 1)]
+
+
+# file: destinations are written by the JVM helper with NIO, and a move
+# within one file: store is a rename; these pin that both keep what
+# FileUtil.copy(..., overwrite=true) followed by a source delete did.
+
+
+def _one(tmp_path, name="x.csv"):
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / name).write_text("new")
+    return src
+
+
+@pytest.mark.parametrize("move", [False, True], ids=["copy", "move"])
+def test_local_transfer_replaces_an_existing_destination(spark, tmp_path, move):
+    src = _one(tmp_path)
+    dst = tmp_path / "dst"
+    dst.mkdir()
+    (dst / "x.csv").write_text("old and longer")
+    (dst / ".x.csv.crc").write_text("stale sidecar")
+    fs.transfer(spark, source_url=url(src), source_file="x.csv", dest_url=url(dst),
+                delete_source=move)
+    assert (dst / "x.csv").read_text() == "new"
+    assert not (dst / ".x.csv.crc").exists()
+    assert (src / "x.csv").exists() != move
+
+
+@pytest.mark.parametrize("move", [False, True], ids=["copy", "move"])
+def test_local_destination_directory_receives_the_file(spark, tmp_path, move):
+    src = _one(tmp_path, "z")
+    (tmp_path / "dst" / "dir").mkdir(parents=True)
+    fs.transfer(spark, source_url=url(src), source_file="z", dest_url=url(tmp_path / "dst"),
+                dest_file="dir", delete_source=move)
+    assert (tmp_path / "dst" / "dir" / "z").read_text() == "new"
+    assert (src / "z").exists() != move
+
+
+def test_same_store_move_renames_and_drops_the_source_sidecar(spark, tmp_path):
+    src = _one(tmp_path)
+    (src / ".x.csv.crc").write_text("sidecar")
+    inode = os.stat(src / "x.csv").st_ino
+    fs.transfer(spark, source_url=url(src), source_file="x.csv",
+                dest_url=url(tmp_path / "dst"), dest_folder="deep/er", delete_source=True)
+    moved = tmp_path / "dst" / "deep" / "er" / "x.csv"
+    assert moved.read_text() == "new" and os.stat(moved).st_ino == inode
+    assert os.listdir(src) == []
+
+
+@pytest.mark.parametrize("move", [False, True], ids=["copy", "move"])
+def test_source_vanished_after_planning_is_201_with_completed_prefix(
+    spark, bucket, tmp_path, monkeypatch, move
+):
+    """A planned source deleted before its turn stops the verb with exit
+    201; the files before it are done, the ones after it untouched."""
+    real = fs._collect_matches
+    planned = []
+
+    def then_vanish(*a, **kw):
+        planned.extend(real(*a, **kw))
+        os.remove(planned[1][len("file:"):])
+        return planned
+
+    monkeypatch.setattr(fs, "_collect_matches", then_vanish)
+    with pytest.raises(S3FileNotFound) as ei:
+        fs.transfer(spark, source_url=url(bucket), source_folder="src",
+                    source_file=r"data_.\.csv$", match_type=fs.REGEX_MATCH,
+                    dest_url=url(tmp_path / "dest"), dest_file="out.csv",
+                    delete_source=move)
+    err = ei.value
+    assert err.exit_code == 201 and err.planned == 3
+    assert [s for s, _d in err.completed] == planned[:1]
+    assert (tmp_path / "dest" / "out_1.csv").read_text() == "dup basename"
+    assert not (tmp_path / "dest" / "out_2.csv").exists()
+    assert os.path.exists(planned[0][len("file:"):]) != move
+    assert os.path.exists(planned[2][len("file:"):])
+
+
+def test_nio_missing_path_is_typed_201(spark, tmp_path):
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    with pytest.raises(Py4JJavaError) as ei:
+        jvm.java.nio.file.Files.size(jvm.java.io.File(str(tmp_path / "gone")).toPath())
+    assert ei.value.java_exception.getClass().getName() == "java.nio.file.NoSuchFileException"
+    assert isinstance(fs._verb_error(ei.value), S3FileNotFound)

@@ -1,11 +1,13 @@
 """Round-trip budget gate for the file verbs and the listing table.
 
 The verbs plan on the driver: a listing costs a constant number of
-py4j round trips whatever its size, a copy or delete a small constant
-per file, and a regex verb starts no Spark job.  The listing
-DataFrame is a JVM LocalRelation: building it costs a constant number
-of round trips too, and listing, matching and collecting its paths
-start no Spark job.  Calls are counted by
+py4j round trips whatever its size, a copy one per file and a delete a
+small constant per file, and a regex verb starts no Spark job.  A copy
+or a same-store move on ``file:`` starts no operating-system process
+either (Hadoop's ``create`` forks two per file without libhadoop).
+The listing DataFrame is a JVM LocalRelation: building it costs a
+constant number of round trips too, and listing, matching and
+collecting its paths start no Spark job.  Calls are counted by
 wrapping the gateway client's ``send_command`` and keeping only the
 calling thread's commands (py4j's finalizer thread releases JVM
 references asynchronously; those releases are not part of the plan).
@@ -13,6 +15,7 @@ references asynchronously; those releases are not part of the plan).
 
 from __future__ import annotations
 
+import os
 import threading
 from contextlib import contextmanager
 
@@ -91,7 +94,31 @@ def test_copy_round_trips_per_file(spark, tmp_path, delete_source):
 
     run(1, "warm")
     per_file = (run(22, "b") - run(2, "a")) / 20
-    assert per_file <= 3
+    assert per_file <= 1
+
+
+def _processes_started() -> int:
+    """The kernel's count of processes forked since boot."""
+    with open("/proc/stat") as fh:
+        return next(int(line.split()[1]) for line in fh if line.startswith("processes "))
+
+
+@pytest.mark.skipif(not os.path.exists("/proc/stat"), reason="reads Linux /proc/stat")
+def test_local_copy_and_move_start_no_process(spark, tmp_path):
+    src = _tree(tmp_path / "src", 100)
+    # a session's first verb may start a few processes, once
+    fs.transfer(spark, source_url=url(_tree(tmp_path / "warm", 2)), source_file=r"\.csv$",
+                match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / "warm_dst"))
+    started = []
+    for source, dest, move in ((src, "copied", False), (tmp_path / "copied", "moved", True)):
+        before = _processes_started()
+        done = fs.transfer(spark, source_url=url(source), source_file=r"\.csv$",
+                           match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / dest),
+                           delete_source=move)
+        started.append(_processes_started() - before)
+        assert done.count == 100
+    assert len(os.listdir(tmp_path / "moved")) == 100 and not os.listdir(tmp_path / "copied")
+    assert max(started) < 10, started  # Hadoop's create: 200 per 100 files
 
 
 def test_delete_round_trips_per_file(spark, tmp_path):

@@ -11,6 +11,9 @@
    keys in plain module order.
 4. No module in s3spark/, tests/ or scripts/ keeps an unused top-level
    import (no linter is installed, so the AST check lives here).
+5. Test modules take the fixture scale directories from
+   tests/conftest.py, which reads each from its environment variable,
+   so none runs at a scale the environment did not choose.
 """
 
 from __future__ import annotations
@@ -256,3 +259,17 @@ def test_no_unused_top_level_imports():
                     rel = os.path.relpath(path, _REPO)
                     offenders += [f"{rel}:{i}: {n}" for i, n in _unused_imports(path)]
     assert not offenders, "unused top-level imports:\n" + "\n".join(offenders)
+
+
+def test_test_modules_take_scale_dirs_from_conftest():
+    fixture_dir = re.compile(r"testdata/sf\d")
+    tests_dir = os.path.join(_REPO, "tests")
+    offenders = []
+    for fn in sorted(os.listdir(tests_dir)):
+        if fn.endswith(".py") and fn != "conftest.py":
+            with open(os.path.join(tests_dir, fn)) as fh:
+                offenders += [
+                    f"tests/{fn}:{i}" for i, line in enumerate(fh, 1)
+                    if fixture_dir.search(line)
+                ]
+    assert not offenders, "hard-coded scale dirs (use tests.conftest):\n" + "\n".join(offenders)

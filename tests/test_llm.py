@@ -356,9 +356,9 @@ def test_dedup_exact_normalized_nonvacuous_at_sf01(spark):
     keeper tie-break is actually observable."""
     import duckdb
 
+    from tests.conftest import E2E_SF_DIR as sf
     from tests.helpers import assert_same
 
-    sf = "/root/testdata/sf0.1"
     con = duckdb.connect()
     try:
         con.execute(

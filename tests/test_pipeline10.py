@@ -6,8 +6,7 @@ from __future__ import annotations
 
 import s3spark.queries  # noqa: F401  (registers everything)
 from s3spark.registry import REGISTRY
-
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR as SF
 
 
 def test_sql_udf_scalar_inlines_as_macro(key_plan):

@@ -9,8 +9,7 @@ import pandas as pd
 
 import s3spark.queries  # noqa: F401  (registers everything)
 from s3spark.registry import REGISTRY
-
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR as SF
 
 
 def _df(spark, key):

@@ -12,8 +12,7 @@ from pyspark.sql import functions as F
 
 import s3spark.queries  # noqa: F401  (registers everything)
 from s3spark.registry import REGISTRY
-
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR as SF
 
 
 def _df(spark, key):

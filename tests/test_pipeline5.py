@@ -9,8 +9,7 @@ from pyspark.sql import functions as F
 
 from s3spark.registry import REGISTRY
 import s3spark.queries  # noqa: F401  (registers everything)
-
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR as SF
 
 
 def _rows(spark, key):

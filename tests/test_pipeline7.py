@@ -13,8 +13,7 @@ from pyspark.sql import functions as F
 
 import s3spark.queries  # noqa: F401  (registers everything)
 from s3spark.registry import REGISTRY
-
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR as SF
 
 
 def _df(spark, key):
@@ -251,7 +250,7 @@ def test_pmi_vocab_cut_is_distributed_topk(spark, key_plan):
     from s3spark.io import table
     from s3spark.queries.pipeline7 import _pmi_vocab
 
-    tok = table(spark, "/root/testdata/sf0.01", "documents").select(
+    tok = table(spark, SF, "documents").select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     )
     vocab_plan = (

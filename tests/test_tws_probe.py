@@ -30,6 +30,8 @@ import importlib.util
 
 import pytest
 
+from tests.conftest import SMOKE_SF_DIR
+
 
 def _protobuf_available() -> bool:
     try:
@@ -81,7 +83,7 @@ def test_tws_running_counts_match_batch(spark, tmp_path):
         def close(self):
             pass
 
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = SMOKE_SF_DIR
     src = tmp_path / "in"
     src.mkdir()
     shutil.copy(f"{sf_dir}/events.parquet", src / "events.parquet")
