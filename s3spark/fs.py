@@ -177,6 +177,7 @@ import org.apache.hadoop.fs.LocalFileSystem;
 import org.apache.hadoop.fs.Path;
 import org.apache.hadoop.fs.PathIsDirectoryException;
 import org.apache.hadoop.fs.RemoteIterator;
+import org.apache.hadoop.io.IOUtils;
 import org.apache.spark.sql.Dataset;
 import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.SparkSession;
@@ -225,8 +226,9 @@ public class S3SparkLister {
      * parent first.  Hadoop's create on file: forks processes per file to
      * set permissions, so a LocalFileSystem destination is written with
      * NIO instead, and a move within that store is a rename that keeps
-     * the inode.  Returns false where FileUtil.copy does: a move whose
-     * source delete found nothing to delete.
+     * the inode (unless the source or destination is a symbolic link).
+     * Returns false where FileUtil.copy does: a move whose source delete
+     * found nothing to delete.
      */
     public boolean copy(FileSystem sfs, String src, FileSystem dfs, String dst,
                         boolean move, boolean mkParent, Configuration conf) throws IOException {
@@ -245,15 +247,21 @@ public class S3SparkLister {
             target = local.pathToFile(to);
             if (target.isDirectory()) throw new PathIsDirectoryException(to.toString());
         }
+        java.nio.file.Path out = target.toPath();
+        // a destination link is written through, as Hadoop's create does;
+        // a rename would replace it, and would move a source link itself
+        // rather than its bytes
+        boolean viaLink = Files.isSymbolicLink(out);
         boolean done = true;
-        if (move && sfs == dfs) {
-            Files.move(local.pathToFile(from).toPath(), target.toPath(),
-                       StandardCopyOption.REPLACE_EXISTING);
+        if (move && sfs == dfs && !viaLink
+                && !Files.isSymbolicLink(local.pathToFile(from).toPath())) {
+            Files.move(local.pathToFile(from).toPath(), out, StandardCopyOption.REPLACE_EXISTING);
             dropChecksum(local, from);
         } else {
             InputStream in = sfs.open(from);
             try {
-                Files.copy(in, target.toPath(), StandardCopyOption.REPLACE_EXISTING);
+                if (viaLink) IOUtils.copyBytes(in, Files.newOutputStream(out), 65536, true);
+                else Files.copy(in, out, StandardCopyOption.REPLACE_EXISTING);
             } finally {
                 in.close();
             }
@@ -731,8 +739,8 @@ def transfer(
     (:func:`naming.destination_full_path`): an explicit ``dest_file``
     is enumerated iff >1 match (D4), else the source basename is kept;
     the sorted matches fix the ``name_i`` numbering.  A move within
-    one ``file:`` store is a rename per file; any other move is copy +
-    delete per file.  Either way it runs file by file, non-atomic
+    one ``file:`` store is a rename per file (a symbolic link is copied
+    and deleted); any other move is copy + delete per file.  Either way it runs file by file, non-atomic
     exactly like S3 COPY+DELETE (move_file.py:125-154): a failure at
     file k leaves files k..N at the source and reports files 1..k-1 as
     ``completed``."""

@@ -5,11 +5,14 @@ from typing import Iterator, NamedTuple
 
 import pytest
 
-# The fixture scale directories.  Test modules take them from here, so
-# each follows its environment variable (a hygiene test pins it).
+# The fixture scale directories; test modules take them from here (a
+# hygiene test pins it).  SF_DIR and E2E_SF_DIR follow their environment
+# variables; SMOKE_SF_DIR and SF01_DIR are fixed, for tests whose result
+# is pinned to that scale.
 SF_DIR = os.environ.get("S3SPARK_TEST_SF_DIR", "/root/testdata/sf0.01")
-SMOKE_SF_DIR = os.environ.get("S3SPARK_SMOKE_SF_DIR", "/root/testdata/sf0.001")
-E2E_SF_DIR = os.environ.get("S3SPARK_E2E_SF_DIR", "/root/testdata/sf0.1")
+SMOKE_SF_DIR = "/root/testdata/sf0.001"
+SF01_DIR = "/root/testdata/sf0.1"
+E2E_SF_DIR = os.environ.get("S3SPARK_E2E_SF_DIR", SF01_DIR)
 
 
 @pytest.fixture(scope="session")

@@ -715,3 +715,38 @@ def test_nio_missing_path_is_typed_201(spark, tmp_path):
         jvm.java.nio.file.Files.size(jvm.java.io.File(str(tmp_path / "gone")).toPath())
     assert ei.value.java_exception.getClass().getName() == "java.nio.file.NoSuchFileException"
     assert isinstance(fs._verb_error(ei.value), S3FileNotFound)
+
+
+@pytest.mark.parametrize("move", [False, True], ids=["copy", "move"])
+def test_local_transfer_of_a_symlink_writes_its_bytes(spark, tmp_path, move):
+    """A listed symlink is a file: the destination holds the bytes it
+    points at, not a link, and a move deletes the link, not its target.
+    Renaming a relative link into another folder would leave it
+    pointing at nothing."""
+    (tmp_path / "store").mkdir()
+    (tmp_path / "store" / "real.csv").write_text("linked bytes")
+    src = tmp_path / "src"
+    src.mkdir()
+    os.symlink("../store/real.csv", src / "x.csv")
+    fs.transfer(spark, source_url=url(src), source_file="x.csv",
+                dest_url=url(tmp_path / "dst"), dest_folder="deep", delete_source=move)
+    out = tmp_path / "dst" / "deep" / "x.csv"
+    assert not out.is_symlink() and out.read_text() == "linked bytes"
+    assert os.path.lexists(src / "x.csv") != move
+    assert (tmp_path / "store" / "real.csv").read_text() == "linked bytes"
+
+
+@pytest.mark.parametrize("move", [False, True], ids=["copy", "move"])
+def test_local_transfer_writes_through_a_destination_symlink(spark, tmp_path, move):
+    """A destination that is a symlink is written through, as Hadoop's
+    create did: the link stays and its target holds the new bytes."""
+    src = _one(tmp_path)
+    dst = tmp_path / "dst"
+    dst.mkdir()
+    (tmp_path / "target.csv").write_text("old and longer")
+    os.symlink("../target.csv", dst / "x.csv")
+    fs.transfer(spark, source_url=url(src), source_file="x.csv", dest_url=url(dst),
+                delete_source=move)
+    assert (dst / "x.csv").is_symlink()
+    assert (tmp_path / "target.csv").read_text() == "new"
+    assert (src / "x.csv").exists() != move

@@ -98,27 +98,34 @@ def test_copy_round_trips_per_file(spark, tmp_path, delete_source):
 
 
 def _processes_started() -> int:
-    """The kernel's count of processes forked since boot."""
+    """The kernel's count of processes forked since boot, by every
+    process on the host."""
     with open("/proc/stat") as fh:
         return next(int(line.split()[1]) for line in fh if line.startswith("processes "))
 
 
 @pytest.mark.skipif(not os.path.exists("/proc/stat"), reason="reads Linux /proc/stat")
 def test_local_copy_and_move_start_no_process(spark, tmp_path):
-    src = _tree(tmp_path / "src", 100)
     # a session's first verb may start a few processes, once
     fs.transfer(spark, source_url=url(_tree(tmp_path / "warm", 2)), source_file=r"\.csv$",
                 match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / "warm_dst"))
-    started = []
-    for source, dest, move in ((src, "copied", False), (tmp_path / "copied", "moved", True)):
-        before = _processes_started()
-        done = fs.transfer(spark, source_url=url(source), source_file=r"\.csv$",
-                           match_type=fs.REGEX_MATCH, dest_url=url(tmp_path / dest),
-                           delete_source=move)
-        started.append(_processes_started() - before)
-        assert done.count == 100
-    assert len(os.listdir(tmp_path / "moved")) == 100 and not os.listdir(tmp_path / "copied")
-    assert max(started) < 10, started  # Hadoop's create: 200 per 100 files
+    # The counter is host-wide, so other processes' forks land in it too.
+    # The verb's own forks (Hadoop's create: 200 per 100 files) land in
+    # every attempt, so the least of three attempts is the verb's, and
+    # the bound sits well above a busy host's noise and far below 200.
+    started = {False: [], True: []}
+    for attempt in range(3):
+        src = _tree(tmp_path / f"src{attempt}", 100)
+        copied, moved = tmp_path / f"copied{attempt}", tmp_path / f"moved{attempt}"
+        for source, dest, move in ((src, copied, False), (copied, moved, True)):
+            before = _processes_started()
+            done = fs.transfer(spark, source_url=url(source), source_file=r"\.csv$",
+                               match_type=fs.REGEX_MATCH, dest_url=url(dest),
+                               delete_source=move)
+            started[move].append(_processes_started() - before)
+            assert done.count == 100
+        assert len(os.listdir(moved)) == 100 and not os.listdir(copied)
+    assert min(started[False]) < 50 and min(started[True]) < 50, started
 
 
 def test_delete_round_trips_per_file(spark, tmp_path):

@@ -12,8 +12,8 @@
 4. No module in s3spark/, tests/ or scripts/ keeps an unused top-level
    import (no linter is installed, so the AST check lives here).
 5. Test modules take the fixture scale directories from
-   tests/conftest.py, which reads each from its environment variable,
-   so none runs at a scale the environment did not choose.
+   tests/conftest.py instead of hard-coding them, so the one that
+   follows S3SPARK_TEST_SF_DIR is never bypassed by a literal path.
 """
 
 from __future__ import annotations
@@ -262,7 +262,7 @@ def test_no_unused_top_level_imports():
 
 
 def test_test_modules_take_scale_dirs_from_conftest():
-    fixture_dir = re.compile(r"testdata/sf\d")
+    fixture_dir = re.compile(r"/root/testdata/sf\d")
     tests_dir = os.path.join(_REPO, "tests")
     offenders = []
     for fn in sorted(os.listdir(tests_dir)):

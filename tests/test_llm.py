@@ -356,7 +356,7 @@ def test_dedup_exact_normalized_nonvacuous_at_sf01(spark):
     keeper tie-break is actually observable."""
     import duckdb
 
-    from tests.conftest import E2E_SF_DIR as sf
+    from tests.conftest import SF01_DIR as sf
     from tests.helpers import assert_same
 
     con = duckdb.connect()
