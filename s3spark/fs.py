@@ -24,8 +24,8 @@ per file to load permissions nobody reads.
 
 The verbs plan on the driver: one walk, Python ``re.search`` over the
 store-relative key (the reference's own matcher, download_file.py:226),
-a Python sort, then per file a Hadoop delete or one call to the
-helper's ``copy``, through JVM handles resolved once per session
+a Python sort, then per file one call to the helper's ``delete`` or
+``copy``, through JVM handles resolved once per session
 (:class:`_Jvm`).  That copy writes a ``file:`` destination with NIO
 and makes a move within one ``file:`` store a rename, because Hadoop's
 ``create`` forks processes per file there; other stores keep Hadoop's
@@ -272,6 +272,11 @@ public class S3SparkLister {
         return done;
     }
 
+    /** One file of a remove, without a py4j round trip for its Path. */
+    public boolean delete(FileSystem fs, String path) throws IOException {
+        return fs.delete(new Path(path), false);
+    }
+
     /** Deletes a file's .name.crc sidecar, as ChecksumFileSystem.delete does. */
     private static void dropChecksum(LocalFileSystem fs, Path p) throws IOException {
         Files.deleteIfExists(fs.pathToFile(fs.getChecksumFile(p)).toPath());
@@ -331,8 +336,8 @@ class _Jvm:
 
     Every ``jvm.org.apache...`` attribute chain costs one reflection
     round trip per dotted segment, and every static-method lookup one
-    more; resolved once, a copy costs one py4j call (the helper's
-    ``copy``) and a delete ~2.
+    more; resolved once, a copy or a delete costs one py4j call (the
+    helper's ``copy`` or ``delete``).
     One checksum-disabled FileSystem is kept per (scheme, authority):
     Hadoop caches the instance itself, so only the calls around it
     are saved.
@@ -686,8 +691,9 @@ def _copy(
 
 
 def _delete(spark: SparkSession, path: str) -> None:
+    """One file deleted by the JVM helper in one py4j call."""
     h = _jvm(spark)
-    h.fs(path).delete(h.Path(path), False)
+    h.lister.delete(h.fs(path), path)
 
 
 def _verb_error(exc: Exception) -> S3SparkError:

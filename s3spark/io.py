@@ -5,6 +5,13 @@ factor.  At 100 TB these would be partitioned parquet datasets under an
 ``s3a://`` prefix — ``table()`` takes any directory/prefix, so the same
 code path serves both.
 
+Every Parquet read of the package (``table()``, ``events_table()``,
+``S3Pipeline.read``) goes through :func:`read_parquet`.  Spark infers a
+Parquet schema from the footer with a Spark job of its own on every
+read; :func:`read_parquet` infers it once per file version and session
+and passes it on later reads, which then start no job.  Only schemas
+are kept, never data: every read still scans the current bytes.
+
 ``dsum``/``davg`` route floating-point SUM/AVG through DECIMAL(25,6):
 the fixture measures carry 2 decimal places, so the cast is exact, and
 decimal summation is associative — the result is identical regardless
@@ -16,9 +23,14 @@ full parallelism (decimal sums still use partial aggregation + AQE).
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
+import stat
 import tempfile
+import weakref
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +50,113 @@ TABLES = (
 DEC = "decimal(25,6)"
 
 
+# Session confs that change how Spark maps a Parquet footer to a schema
+# (the flags ParquetToSparkSchemaConverter reads); a memoized schema
+# holds only for the values it was inferred under.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+# Inference failures that depend only on the footer and the confs above,
+# so they hold for a whole file version like a schema does.
+_FOOTER_ERRORS = ("PARQUET_TYPE_ILLEGAL", "PARQUET_TYPE_NOT_SUPPORTED",
+                  "PARQUET_TYPE_NOT_RECOGNIZED")
+_GLOB = frozenset("*?[]{}\\")
+# entries per session; past it the oldest entry goes
+_MEMO_CAP = 4096
+
+# session -> {path: (file version, schema, or the message of a footer error)}
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _local_path(spark: SparkSession, path: str) -> str | None:
+    """The absolute local path that a ``file:`` URL, or an absolute path
+    on a ``file:`` default FileSystem, names; None for anything else."""
+    if path.startswith("file:"):
+        rest = path[5:]
+        if rest.startswith("//"):  # file://authority/path
+            if not rest.startswith("///"):
+                return None
+            rest = rest[2:]
+        return rest if rest.startswith("/") else None
+    if path.startswith("/"):
+        default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS") or "file:///"
+        if default_fs.startswith("file:"):
+            return path
+    return None
+
+
+def _file_version(spark: SparkSession, path: str) -> tuple | None:
+    """What a memoized schema is valid for: the file's identity and the
+    schema-conversion confs.  None where nothing may be memoized: a
+    directory, a glob, a missing path, anything but one plain file."""
+    if not path or _GLOB.intersection(path):
+        return None
+    local = _local_path(spark, path)
+    if local is None:
+        ident = _hadoop_file_identity(spark, path)
+    else:
+        try:
+            st = os.stat(local)
+        except OSError:
+            return None
+        if not stat.S_ISREG(st.st_mode):
+            return None
+        ident = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+    if ident is None:
+        return None
+    return ident, tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS)
+
+
+def _hadoop_file_identity(spark: SparkSession, path: str) -> tuple | None:
+    """(length, modification time) of one plain file on any Hadoop
+    store, from its FileStatus; None for a folder or a missing path."""
+    try:
+        p = spark._jvm.org.apache.hadoop.fs.Path(path)
+        st = p.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(p)
+        if not st.isFile():
+            return None
+        return st.getLen(), st.getModificationTime()
+    except Py4JJavaError:
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred once per
+    file version and session.
+
+    The first read of a plain file infers as Spark does and memoizes the
+    schema under the file's version (:func:`_file_version`).  A later
+    read of the same version passes that schema and starts no job; a
+    changed file or a changed conf infers again and replaces the entry.
+    A directory is never memoized, since a new file in it can change
+    its schema.  A footer Spark cannot convert is memoized too, as its
+    error, which a later read raises again without a job."""
+    version = _file_version(spark, path)
+    if version is None:
+        return spark.read.parquet(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == version:
+        if isinstance(hit[1], str):
+            raise AnalysisException(message=hit[1])
+        return spark.read.schema(hit[1]).parquet(path)
+    if len(memo) >= _MEMO_CAP:
+        memo.pop(next(iter(memo)))
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in _FOOTER_ERRORS:
+            memo[path] = (version, str(e))
+        raise
+    memo[path] = (version, df.schema)
+    return df
+
+
 # events fixture footer schema for generators that emit
 # ts:TIMESTAMP(NANOS), requested as LongType — the reader serves the
 # raw int64 nanos under an explicit schema, so no session conf
@@ -54,15 +173,17 @@ def events_table(spark: SparkSession, path: str) -> DataFrame:
 
     Fixture generators have shipped ``ts`` as both TIMESTAMP(MICROS)
     (readable directly) and TIMESTAMP(NANOS), which Spark's parquet
-    reader rejects ([PARQUET_TYPE_ILLEGAL]).  Probe with a normal read
-    first — schema inference reads only footers, so the probe is cheap
-    and fails fast on nanos — then fall back to an explicit int64
-    schema and convert ns→µs (matching DuckDB's coercion).  Both paths
-    are scoped to this read: no session conf (nanosAsLong) is toggled,
-    so other parquet reads in the same session keep their semantics.
+    reader rejects ([PARQUET_TYPE_ILLEGAL]).  Probe with
+    :func:`read_parquet` first — schema inference reads only footers,
+    and the probe's outcome is memoized per file version, so a nanos
+    file fails its inference once and later reads go straight to the
+    fallback — then fall back to an explicit int64 schema and convert
+    ns→µs (matching DuckDB's coercion).  Both paths are scoped to this
+    read: no session conf (nanosAsLong) is toggled, so other parquet
+    reads in the same session keep their semantics.
     """
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             # nanosAsLong happened to be set session-wide by the caller
@@ -79,10 +200,12 @@ def events_table(spark: SparkSession, path: str) -> DataFrame:
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table (parquet file or partitioned directory)."""
+    """Read one fixture table (parquet file or partitioned directory)
+    through :func:`read_parquet`: a file's schema is inferred once per
+    session, a directory's on every read."""
     if name == "events":
         return events_table(spark, f"{sf_dir}/{name}.parquet")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 _SCRATCH: dict[str, str] = {}

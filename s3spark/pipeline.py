@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from s3spark import fs
+from s3spark.io import read_parquet
 from s3spark.registry import REGISTRY
 from s3spark.session import get_spark
 
@@ -166,7 +167,11 @@ class S3Pipeline:
     def read(self, url: str, fmt: str = "parquet", **options) -> DataFrame:
         """Dataset ingest: distributed columnar read (executors pull
         splits directly from the store; predicate/column pushdown via
-        Catalyst)."""
+        Catalyst).  A plain Parquet read goes through
+        :func:`s3spark.io.read_parquet`, so a file's schema is inferred
+        once per session rather than by a Spark job on every read."""
+        if fmt == "parquet" and not options:
+            return read_parquet(self.spark, _as_url(url))
         return self.spark.read.format(fmt).options(**options).load(_as_url(url))
 
     def write(

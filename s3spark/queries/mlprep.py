@@ -113,7 +113,7 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     object.  Zero extra I/O: metadata is constant per split.  The
     fixture stores one file per table, which the distinct-count
     proves."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct(F.col("_metadata.file_name")).cast("int").alias(

@@ -273,3 +273,23 @@ def test_test_modules_take_scale_dirs_from_conftest():
                     if fixture_dir.search(line)
                 ]
     assert not offenders, "hard-coded scale dirs (use tests.conftest):\n" + "\n".join(offenders)
+
+
+def test_queries_read_fixture_tables_through_io():
+    """A query reads a fixture table with ``io.table``, whose Parquet
+    schema is inferred once per session, never with ``spark.read`` on a
+    path under ``sf_dir``, which infers it with a Spark job every time."""
+    offenders = []
+    for path in _source_files():
+        if os.path.join("s3spark", "queries") not in path:
+            continue
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call) and re.search(r"\.read\b", ast.unparse(node.func))):
+                continue
+            for arg in node.args:
+                text = ast.unparse(arg)
+                if "sf_dir" in text and ".parquet" in text:
+                    offenders.append(f"{os.path.relpath(path, _REPO)}:{node.lineno}: {text}")
+    assert not offenders, "fixture tables read around io.table:\n" + "\n".join(offenders)
