@@ -8,8 +8,9 @@ code path serves both.
 Every Parquet read of the package (``table()``, ``events_table()``,
 ``S3Pipeline.read``) goes through :func:`read_parquet`.  Spark infers a
 Parquet schema from the footer with a Spark job of its own on every
-read; :func:`read_parquet` infers it once per file version and session
-and passes it on later reads, which then start no job.  Only schemas
+read; :func:`read_parquet` infers a local file's schema once per file
+version and session and passes it on later reads, which then start no
+job.  Only schemas
 are kept, never data: every read still scans the current bytes.
 
 ``dsum``/``davg`` route floating-point SUM/AVG through DECIMAL(25,6):
@@ -29,7 +30,6 @@ import stat
 import tempfile
 import weakref
 
-from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,7 +69,7 @@ _GLOB = frozenset("*?[]{}\\")
 # entries per session; past it the oldest entry goes
 _MEMO_CAP = 4096
 
-# session -> {path: (file version, schema, or the message of a footer error)}
+# session -> {path: (file version, schema or footer error)}
 _SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -93,48 +93,33 @@ def _local_path(spark: SparkSession, path: str) -> str | None:
 def _file_version(spark: SparkSession, path: str) -> tuple | None:
     """What a memoized schema is valid for: the file's identity and the
     schema-conversion confs.  None where nothing may be memoized: a
-    directory, a glob, a missing path, anything but one plain file."""
-    if not path or _GLOB.intersection(path):
-        return None
+    path off the local file system, a directory, a glob, a missing
+    path, anything but one plain local file."""
     local = _local_path(spark, path)
-    if local is None:
-        ident = _hadoop_file_identity(spark, path)
-    else:
-        try:
-            st = os.stat(local)
-        except OSError:
-            return None
-        if not stat.S_ISREG(st.st_mode):
-            return None
-        ident = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
-    if ident is None:
+    if local is None or _GLOB.intersection(local):
         return None
-    return ident, tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS)
-
-
-def _hadoop_file_identity(spark: SparkSession, path: str) -> tuple | None:
-    """(length, modification time) of one plain file on any Hadoop
-    store, from its FileStatus; None for a folder or a missing path."""
     try:
-        p = spark._jvm.org.apache.hadoop.fs.Path(path)
-        st = p.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(p)
-        if not st.isFile():
-            return None
-        return st.getLen(), st.getModificationTime()
-    except Py4JJavaError:
+        st = os.stat(local)
+    except OSError:
         return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    ident = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+    return ident, tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)``, with the schema inferred once per
     file version and session.
 
-    The first read of a plain file infers as Spark does and memoizes the
-    schema under the file's version (:func:`_file_version`).  A later
+    The first read of a plain local file infers as Spark does and
+    memoizes the schema under the file's version (:func:`_file_version`).  A later
     read of the same version passes that schema and starts no job; a
     changed file or a changed conf infers again and replaces the entry.
     A directory is never memoized, since a new file in it can change
-    its schema.  A footer Spark cannot convert is memoized too, as its
+    its schema, and neither is a path on another store (``s3a://``,
+    ``hdfs://``), whose modification times are too coarse to tell a
+    same-length rewrite from the old file.  A footer Spark cannot convert is memoized too, as its
     error, which a later read raises again without a job."""
     version = _file_version(spark, path)
     if version is None:
@@ -142,8 +127,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     memo = _SCHEMAS.setdefault(spark, {})
     hit = memo.get(path)
     if hit is not None and hit[0] == version:
-        if isinstance(hit[1], str):
-            raise AnalysisException(message=hit[1])
+        if isinstance(hit[1], AnalysisException):
+            # the first read's exception, so the type and condition hold;
+            # its old traceback goes, or each raise would extend it
+            raise hit[1].with_traceback(None)
         return spark.read.schema(hit[1]).parquet(path)
     if len(memo) >= _MEMO_CAP:
         memo.pop(next(iter(memo)))
@@ -151,7 +138,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         df = spark.read.parquet(path)
     except AnalysisException as e:
         if e.getCondition() in _FOOTER_ERRORS:
-            memo[path] = (version, str(e))
+            memo[path] = (version, e)
         raise
     memo[path] = (version, df.schema)
     return df

@@ -168,8 +168,9 @@ class S3Pipeline:
         """Dataset ingest: distributed columnar read (executors pull
         splits directly from the store; predicate/column pushdown via
         Catalyst).  A plain Parquet read goes through
-        :func:`s3spark.io.read_parquet`, so a file's schema is inferred
-        once per session rather than by a Spark job on every read."""
+        :func:`s3spark.io.read_parquet`, so a local file's schema is
+        inferred once per session rather than by a Spark job on every
+        read."""
         if fmt == "parquet" and not options:
             return read_parquet(self.spark, _as_url(url))
         return self.spark.read.format(fmt).options(**options).load(_as_url(url))

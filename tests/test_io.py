@@ -6,22 +6,24 @@ every read, and a memoized read gives the same schema, plan and rows as
 
 Each test works in its own ``spark.newSession()``: it starts with an
 empty memo whatever other tests read before, and a conf it sets stays
-out of the shared session.  Jobs are counted on the shared
-SparkContext's status tracker; schema inference is a job of its own.
+out of the shared session.  Jobs are counted as new job ids on the
+shared SparkContext's status tracker; schema inference is a job of its
+own.
 """
 
 from __future__ import annotations
 
-import os
 import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 
 from s3spark import io
 from s3spark.pipeline import S3Pipeline
 from tests.conftest import SMOKE_SF_DIR
+from tests.test_fs_budget import _jobs
 
 
 @pytest.fixture
@@ -29,18 +31,11 @@ def session(spark):
     return spark.newSession()
 
 
-def _jobs(spark) -> int:
-    """How many jobs the SparkContext has started so far."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(None))
-
-
 def _jobs_of(spark, fn):
     """(what fn returned, the jobs it started)."""
     before = _jobs(spark)
     out = fn()
-    return out, _jobs(spark) - before
+    return out, len(_jobs(spark) - before)
 
 
 def test_second_table_read_starts_no_job(session):
@@ -142,23 +137,19 @@ def test_nanos_events_file_is_inferred_once(session, tmp_path):
 def test_unconvertible_footer_raises_again_without_a_job(session, tmp_path):
     path = str(tmp_path / "nanos.parquet")
     pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp("ns"))}), path)
-    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+    with pytest.raises(AnalysisException) as first:
         io.read_parquet(session, path)
+    assert first.value.getCondition() == "PARQUET_TYPE_ILLEGAL"
 
     def again():
-        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        with pytest.raises(AnalysisException) as second:
             io.read_parquet(session, path)
+        return second.value
 
-    assert _jobs_of(session, again)[1] == 0
-
-
-def test_hadoop_file_identity(spark, tmp_path):
-    f = tmp_path / "f.parquet"
-    f.write_bytes(b"1234")
-    length, mtime_ms = io._hadoop_file_identity(spark, f"file://{f}")
-    assert length == 4 and mtime_ms == os.stat(f).st_mtime_ns // 1_000_000
-    assert io._hadoop_file_identity(spark, f"file://{tmp_path}") is None
-    assert io._hadoop_file_identity(spark, f"file://{tmp_path}/missing") is None
+    err, jobs = _jobs_of(session, again)
+    assert jobs == 0
+    assert err.getCondition() == "PARQUET_TYPE_ILLEGAL"
+    assert err.getMessageParameters() == first.value.getMessageParameters()
 
 
 @pytest.mark.parametrize(
