@@ -3,42 +3,24 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-The printed line is kept compact (headline queries only, 2-dp) because
-the round-1 driver truncated the full 164-key payload to its tail
-("parsed": null in BENCH_r01.json); the complete per-key timing map is
-written to BENCH_DETAIL.json next to this script every run.
+The printed line is kept compact (headline keys only, 2 dp) because a
+driver that records stdout truncated the full per-key payload; the
+complete record is written to BENCH_DETAIL.json next to this script.
 
-Each query is timed as plan-build + execution to completion via a
-count/collect-free action: ``df.write.format("noop")`` exercises the
-full pipeline without materializing results into the driver.
+Every key is timed the same way, by :func:`sample`, which the other
+harnesses (``scale_stress.py``, ``scripts/opt_ab.py``,
+``scripts/sf1_core_panel.py``) call too.  A sample times the key's
+build, ``fn(spark, sf_dir)`` with any eager ``localCheckpoint`` or
+``collect`` jobs it starts, and then its sink, a ``noop`` write that
+runs the whole plan without bringing rows to the driver.  The two
+parts share one clock, so ``build_s + sink_s`` is the sample's wall
+time, and the Spark jobs each part started are read from the status
+store.  A key records the sample with the median wall time of ``REPS``
+("queries"), the fastest and slowest of them ("spread") and that
+sample's layers ("layers": build_s, sink_s, the wall time of each
+build job, and the count of sink jobs).
 
-Per-key sampling is tiered by first-sample magnitude and committed
-history, and the tier used is recorded per key in BENCH_DETAIL.json
-("mode": {key: "median3"|"min2"|"min2_hist"|"single"}) so cross-round
-diffs can tell estimator changes from real regressions: <=3 s →
-median-of-``REPS`` (3); 3-6 s → min-of-2;
->6 s → single shot UNLESS the first sample exceeds 2x the key's
-committed BENCH_DETAIL time, in which case one extra rep is taken and
-the MIN recorded ("min2_hist" — round-8's driver read
-agg_weighted_median at 6.44 s vs 2.73 s committed because the static
-band never engaged above 6 s).  Rationale: the round-3 driver machine
-ran a uniform ~1.33x slower than the builder's run with a long noise
-tail — single-shot wall clocks on a loaded box masquerade as
-regressions; load noise is one-sided, so MIN is the better central
-estimate wherever only two samples exist.  Since round 10 the
-2x-history check applies at EVERY magnitude (the r09 driver recorded
-sub-6 s keys at 2-6x their committed values with no marker): a
-recorded value still above 2x committed history earns one extra
-sample ("+hist" mode suffix), and if it STAYS above 2x the key is
-stamped in "load_suspect" (key → committed value) so the artifact
-itself separates box load from plan regression per key.  The min/max
-spread is recorded alongside ("spread"), and multi-run streaming keys
-record a per-run wall-clock split ("run_split", from
-s3spark.telemetry).
-
-The sampling protocol is fixed by the module constants ``REPS``,
-``REP_CUTOFF_S``, ``SINGLE_CUTOFF_S`` and ``DETAIL_PATH``; the only
-settings read from the environment are ``SPARK_GRAFT_SF_DIR``,
+Settings read from the environment: ``SPARK_GRAFT_SF_DIR``,
 ``SPARK_GRAFT_CPUS`` (via s3spark.session) and ``SPARK_GRAFT_SHUFFLE``.
 """
 
@@ -54,6 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import s3spark.queries  # noqa: E402,F401
 from s3spark.registry import REGISTRY  # noqa: E402
 from s3spark.session import get_spark  # noqa: E402
+from perfbench.trace import SparkStatus  # noqa: E402
 
 # Keys surfaced in the one-line JSON payload (the full map goes to
 # BENCH_DETAIL.json). One representative per operator family from
@@ -93,15 +76,42 @@ HEADLINE_KEYS = (
     "doc_chunk_overlap",
 )
 
-# Sampling protocol (see the module docstring): samples per sub-cutoff
-# key, the median-of-REPS and min-of-2 band edges in seconds, and the
-# committed history the 2x check reads and each run rewrites.
 REPS = 3
-REP_CUTOFF_S = 3.0
-SINGLE_CUTOFF_S = 6.0
 DETAIL_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
 )
+
+
+def sample(spark, status: SparkStatus, fn, sf_dir: str) -> dict:
+    """Run ``fn(spark, sf_dir)`` into the noop sink once and return its
+    wall time split into build and sink, with the jobs of each part.
+
+    ``status`` is the session's :class:`SparkStatus`; jobs started
+    before the call, by untimed code between samples, are skipped."""
+    # Jump past the jobs the status store holds first: it keeps only the
+    # newest spark.ui.retainedJobs, and a pointer at a job it has dropped
+    # would never advance.
+    held = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    status.next_job = max([status.next_job, *(j + 1 for j in held)])
+    status.skip_to_latest()
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    build_s = time.perf_counter() - t0
+    build_jobs = status.new_jobs()
+    t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    sink_s = time.perf_counter() - t0
+    return {
+        "wall_s": build_s + sink_s,
+        "build_s": build_s,
+        "sink_s": sink_s,
+        "build_job_s": [
+            round(j["end"] - j["start"], 3)
+            for j in build_jobs
+            if j["start"] is not None and j["end"] is not None
+        ],
+        "sink_jobs": len(status.new_jobs()),
+    }
 
 
 def main() -> None:
@@ -113,120 +123,37 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false", "spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    status = SparkStatus(spark)
 
     # Warm the JVM + parquet footers once so per-query times measure the
     # query, not first-touch JIT/IO.
     try:
-        REGISTRY["agg_groupby"].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        sample(spark, status, REGISTRY["agg_groupby"].fn, sf_dir)
     except Exception as e:
         print(f"bench: warmup failed: {e}", file=sys.stderr)
 
-    # Sampling protocol by first-sample magnitude (round-7 verdict
-    # evidence-durability item): sub-second keys are noise-dominated →
-    # full median-of-N; the 3-6 s band gets ONE extra rep and records
-    # the MIN (load noise is one-sided — contention only ADDS time, so
-    # min-of-2 is the better central estimate where a single outlier
-    # sample would otherwise drive round-over-round comparisons); keys
-    # past the single-shot cutoff keep one sample — repeating the heavy
-    # tail would triple bench wall-clock for keys whose relative noise
-    # is smallest.  EXCEPT (round-8 verdict item 2): a first sample
-    # above 2x the key's COMMITTED BENCH_DETAIL time is suspect at any
-    # magnitude — round 8's driver read agg_weighted_median at 6.44 s
-    # vs 2.73 s committed because the static band never engaged above
-    # 6 s — so the history check forces one extra rep (MIN recorded,
-    # mode "min2_hist") wherever the static protocol would have stopped
-    # at a single sample.
-    hist: dict[str, float] = {}
-    try:
-        with open(DETAIL_PATH, encoding="utf-8") as fh:
-            prev = json.load(fh)
-        if isinstance(prev, dict) and isinstance(prev.get("queries"), dict):
-            hist = {
-                k: float(v)
-                for k, v in prev["queries"].items()
-                if isinstance(v, (int, float)) and v > 0
-            }
-    except (OSError, ValueError):
-        pass
-
     times: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
-    modes: dict[str, str] = {}
-    load_suspect: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     for name in sorted(REGISTRY):
-        q = REGISTRY[name]
-
-        def one_sample() -> float:
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return time.perf_counter() - t0
-
-        samples: list[float] = []
-        mode = ""
         try:
-            s1 = one_sample()
-            samples.append(s1)
-            if s1 <= REP_CUTOFF_S:
-                for _ in range(REPS - 1):
-                    samples.append(one_sample())
-                mode = f"median{len(samples)}"
-            elif s1 <= SINGLE_CUTOFF_S:
-                samples.append(one_sample())
-                mode = "min2"
-            elif name in hist and s1 > 2.0 * hist[name]:
-                # History says this key is much cheaper than the first
-                # sample: one-sided load noise landed on a heavy key.
-                samples.append(one_sample())
-                mode = "min2_hist"
-            else:
-                mode = "single"
+            samples = sorted(
+                (sample(spark, status, REGISTRY[name].fn, sf_dir) for _ in range(REPS)),
+                key=lambda s: s["wall_s"],
+            )
         except Exception as e:  # pragma: no cover - bench robustness
             print(f"bench: {name} failed: {e}", file=sys.stderr)
-            samples = []
-        if samples:
-            samples.sort()
-            if mode.startswith("min2"):
-                rec = samples[0]
-            else:
-                rec = samples[len(samples) // 2]
-            # Round-9 verdict item 2: the 2x-history protection now
-            # engages at EVERY magnitude, not just past the single-shot
-            # cutoff — the r09 driver artifact carried 1.3-5.7 s
-            # readings 2-6x their committed values (window_running 1.32
-            # vs 0.44, dedup_jaccard_capped 5.71 vs 1.00) with no
-            # in-artifact marker because min2_hist only armed above
-            # 6 s.  If the recorded value still exceeds 2x the key's
-            # committed BENCH_DETAIL time after the static protocol,
-            # take ONE more sample (cheap at these magnitudes; load
-            # noise is one-sided so MIN stays the right estimator) —
-            # and if even that stays over 2x, stamp the key
-            # "load_suspect" with its committed value so a future
-            # judge separates box load from plan regression PER KEY,
-            # not only via the global canary ratio.
-            if name in hist and rec > 2.0 * hist[name]:
-                if mode != "min2_hist":  # min2_hist already re-sampled
-                    try:
-                        extra = one_sample()
-                        samples.append(extra)
-                        samples.sort()
-                        rec = min(rec, extra)
-                        mode += "+hist"
-                    except Exception as e:  # pragma: no cover
-                        print(
-                            f"bench: {name} hist resample failed: {e}",
-                            file=sys.stderr,
-                        )
-                if rec > 2.0 * hist[name]:
-                    load_suspect[name] = round(hist[name], 4)
-            times[name] = round(rec, 4)
-            spread[name] = [round(samples[0], 4), round(samples[-1], 4)]
-            modes[name] = mode
-        else:
             times[name] = -1.0
+            continue
+        rec = samples[REPS // 2]
+        times[name] = round(rec["wall_s"], 4)
+        spread[name] = [round(samples[0]["wall_s"], 4), round(samples[-1]["wall_s"], 4)]
+        layers[name] = {
+            "build_s": round(rec["build_s"], 4),
+            "sink_s": round(rec["sink_s"], 4),
+            "build_job_s": rec["build_job_s"],
+            "sink_jobs": rec["sink_jobs"],
+        }
         # NO inter-key System.gc() here, unlike scale_stress.py: the
         # bench JVM runs on the default (small) driver heap, so natural
         # collections keep the local-mode ContextCleaner current, and a
@@ -239,8 +166,6 @@ def main() -> None:
     total = round(sum(t for t in times.values() if t > 0), 4)
     failures = sorted(k for k, t in times.items() if t < 0)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    from s3spark.telemetry import RUN_SPLITS
-
     with open(DETAIL_PATH, "w") as fh:
         json.dump(
             {
@@ -249,53 +174,23 @@ def main() -> None:
                 "unit": "sec",
                 "queries": times,
                 "spread": spread,
-                "mode": modes,
-                "load_suspect": load_suspect,
-                "run_split": {
-                    k: v for k, v in sorted(RUN_SPLITS.items()) if v
-                },
+                "layers": layers,
                 "reps": REPS,
                 "failures": failures,
                 "sf": sf_val,
-                "canary_ratio": (
-                    round(times["agg_groupby"] / times["scan_parquet"], 3)
-                    if times.get("scan_parquet", 0) > 0
-                    and times.get("agg_groupby", 0) > 0
-                    else None
-                ),
             },
             fh,
             indent=1,
         )
-    headline = {
-        k: round(times[k], 2) for k in HEADLINE_KEYS if k in times
-    }
-    # Machine-load canary (round-7 verdict item 4): agg_groupby drifted
-    # 1.58→2.32 s across driver rounds with no code change.  The
-    # flagship/scan ratio is load-invariant (uniform machine slowdown
-    # inflates both, a PLAN regression inflates only the numerator), so
-    # the artifact itself now distinguishes a loaded box from a real
-    # regression: compare canary_ratio round-over-round, not raw times.
-    canary = {}
-    if times.get("scan_parquet", 0) > 0 and times.get("agg_groupby", 0) > 0:
-        canary = {
-            "scan_parquet": times["scan_parquet"],
-            "agg_groupby": times["agg_groupby"],
-            "canary_ratio": round(
-                times["agg_groupby"] / times["scan_parquet"], 3
-            ),
-        }
     print(
         json.dumps(
             {
                 "metric": "total_query_wall_clock",
                 "value": total,
                 "unit": "sec",
-                "queries": headline,
-                "canary": canary,
+                "queries": {k: round(times[k], 2) for k in HEADLINE_KEYS if k in times},
                 "n_queries": len(times),
                 "n_failed": len(failures),
-                "n_load_suspect": len(load_suspect),
                 "reps": REPS,
                 "queries_file": "BENCH_DETAIL.json",
                 "sf": sf_val,

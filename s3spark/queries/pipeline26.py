@@ -146,19 +146,6 @@ def sim_ivfpq_persisted_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     losslessly, so the round-trip through the index changes no
     value.  That equality IS the test: index build + pruned read ==
     one-shot inline computation."""
-    import time as _time
-
-    from s3spark.telemetry import RUN_SPLITS
-
-    # Timing attribution (round-12 verdict item 8): the key's single
-    # bench wall-clock hides that the index BUILD is replayed per
-    # invocation by design while the READ half is the layout-optimized
-    # part.  Record [build_s, probe_s] here; the remaining wall-clock
-    # (bench sample minus their sum) is the pruned-read + ADC score
-    # half, which executes in the caller's sink action.
-    RUN_SPLITS["sim_ivfpq_persisted_read"] = []
-    _t0 = _time.perf_counter()
-
     el = lambda i: _SPARK_EL.format(i=i)  # noqa: E731
     table(spark, sf_dir, "embeddings").createOrReplaceTempView(
         "p26_embeddings"
@@ -192,10 +179,6 @@ def sim_ivfpq_persisted_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster_id"
     ).mode("overwrite").parquet(out)
     spark.catalog.refreshByPath(out)
-    RUN_SPLITS["sim_ivfpq_persisted_read"].append(
-        round(_time.perf_counter() - _t0, 4)
-    )
-    _t0 = _time.perf_counter()
 
     # -- 2. PROBE: coarse-rank the codebook per query driver-side.
     # Q x K = 80 rows — a planner metadata step bounded by the query
@@ -220,9 +203,6 @@ def sim_ivfpq_persisted_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.createDataFrame(
         probes, "query_id BIGINT, qc INT"
     ).createOrReplaceTempView("p26_probes")
-    RUN_SPLITS["sim_ivfpq_persisted_read"].append(
-        round(_time.perf_counter() - _t0, 4)
-    )
 
     # -- 3. READ: explicit schema (partition column included — read
     # from the ROOT, so directory discovery fills cluster_id); the

@@ -319,11 +319,6 @@ def stream_outer_join_watermark(
     def run() -> None:
         # parquet file sink — unlike the memory sink it supports
         # checkpoint recovery, so watermark + offsets resume in run 2
-        import time as _time
-
-        from s3spark.telemetry import RUN_SPLITS
-
-        t0 = _time.perf_counter()
         q = (
             joined_stream()
             .writeStream.format("parquet")
@@ -334,13 +329,7 @@ def stream_outer_join_watermark(
             .start()
         )
         q.awaitTermination()
-        RUN_SPLITS.setdefault("stream_outer_join_watermark", []).append(
-            round(_time.perf_counter() - t0, 4)
-        )
 
-    from s3spark.telemetry import RUN_SPLITS as _splits
-
-    _splits["stream_outer_join_watermark"] = []
     run()
 
     # sentinel: one far-future non-click event pushes the watermark

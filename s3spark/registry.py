@@ -22,7 +22,6 @@ class Query:
     name: str
     fn: QueryFn
     oracle: Optional[str]  # ANSI SQL for DuckDB; None → rows-only check
-    doc: str = ""
 
 
 REGISTRY: dict[str, Query] = {}
@@ -34,7 +33,7 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "")
+        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle)
         return fn
 
     return deco

@@ -17,7 +17,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import bench  # noqa: E402
 import s3spark.queries  # noqa: E402,F401
+from perfbench.trace import SparkStatus  # noqa: E402
+from s3spark.io import table  # noqa: E402
 from s3spark.registry import REGISTRY  # noqa: E402
 from s3spark.session import get_spark  # noqa: E402
 
@@ -255,6 +258,13 @@ DOC_KEYS = ["dedup_fuzzy_minhash", "dedup_exact", "text_stats",
 DOC_SMALL = "/root/testdata/sf0.01"
 DOC_BIG = SRC  # sf0.1
 
+# The keys ann_recall scores: each of ANN_KEYS against the exact
+# ANN_EXACT pair set, and PHASH_KEY against its planted truth.
+ANN_EXACT = "sim_cosine_topk"
+ANN_KEYS = ("sim_ann_ivf", "sim_ann_lsh_hand", "sim_pq_adc_topk",
+            "sim_ivfpq_search_e2e", "sim_ivfpq_persisted_read")
+PHASH_KEY = "mm_image_phash_dedup"
+
 
 def build(spark) -> None:
     from pyspark.sql import functions as F
@@ -268,8 +278,8 @@ def build(spark) -> None:
     for t in ["region", "nation", "customer", "supplier", "part",
               "events", "documents", "embeddings"]:
         shutil.copy(f"{SRC}/{t}.parquet", f"{DST}/{t}.parquet")
-    orders = spark.read.parquet(f"{SRC}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SRC}/lineitem.parquet")
+    orders = table(spark, SRC, "orders")
+    lineitem = table(spark, SRC, "lineitem")
     reps = spark.range(REPLICAS).select(F.col("id").alias("rep"))
     OFF = 10_000_000
     # repartition(32) before write: the replicated fact snappy-compresses
@@ -299,7 +309,8 @@ def build(spark) -> None:
 
 
 def time_keys(spark, sf_dir: str, keys=FACT_KEYS) -> dict[str, float]:
-    """Median of 3 after one discarded warm-up run: the first pass over
+    """Median wall time of ``bench.REPS`` ``bench.sample`` runs per key,
+    after one discarded warm-up run: the first pass over
     a freshly written sf1 dataset is OS-page-cache + JIT dominated
     (observed 10-20x inflation) and says nothing about per-row cost.
 
@@ -314,16 +325,16 @@ def time_keys(spark, sf_dir: str, keys=FACT_KEYS) -> dict[str, float]:
     cumulative context state, not any single predecessor).  Forcing the
     collection in the inter-key gap keeps the backlog out of the timed
     windows for every key."""
+    status = SparkStatus(spark)
     out = {}
     for name in keys:
         fn = REGISTRY[name].fn
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-        out[name] = round(sorted(times)[1], 3)
+        bench.sample(spark, status, fn, sf_dir)
+        times = sorted(
+            bench.sample(spark, status, fn, sf_dir)["wall_s"]
+            for _ in range(bench.REPS)
+        )
+        out[name] = round(times[bench.REPS // 2], 3)
         spark.sparkContext._jvm.System.gc()
         time.sleep(0.3)
     return out
@@ -357,7 +368,7 @@ def ann_recall(spark) -> dict:
     }
     out: dict[str, dict[str, float | None]] = {}
     for label, sf in (("sf0.01", DOC_SMALL), ("sf0.1", DOC_BIG)):
-        exact = pairset("sim_cosine_topk", sf)
+        exact = pairset(ANN_EXACT, sf)
         # Empty denominators record null rather than aborting the
         # harness after every timing panel has already been paid for
         # (round-10 advice: a degenerate/shrunk embeddings fixture
@@ -365,22 +376,16 @@ def ann_recall(spark) -> dict:
         # sim_pq_adc_topk ranks by exact L2 after the ADC candidate
         # cut; the fixture embeddings are unit-norm, so L2 order ==
         # cosine order and sim_cosine_topk is a valid exact baseline.
-        for key in (
-            "sim_ann_ivf",
-            "sim_ann_lsh_hand",
-            "sim_pq_adc_topk",
-            "sim_ivfpq_search_e2e",
-            "sim_ivfpq_persisted_read",
-        ):
+        for key in ANN_KEYS:
             approx = pairset(key, sf)
             out.setdefault(key, {})[label] = (
                 round(len(exact & approx) / len(exact), 4) if exact else None
             )
         got = {
             (r.doc_a, r.doc_b)
-            for r in REGISTRY["mm_image_phash_dedup"].fn(spark, sf).collect()
+            for r in REGISTRY[PHASH_KEY].fn(spark, sf).collect()
         }
-        out.setdefault("mm_image_phash_dedup", {})[label] = (
+        out.setdefault(PHASH_KEY, {})[label] = (
             round(len(got & planted) / len(planted), 4) if planted else None
         )
     return out

@@ -1,35 +1,41 @@
-"""Same-session A/B harness for round-12/13 optimizations.
+"""Same-session A/B harness for a query module's optimizations.
 
 Loads a query module's committed version (``git show HEAD:<path>``)
 under a scratch module name alongside the working-tree version, then
 for each requested key: asserts the two variants produce identical
-collected rows (order-insensitive), and times interleaved noop-sink
-reps (guide §1.4) so JIT/codegen warmth is shared instead of biasing
-whichever variant runs first.
+collected rows (order-insensitive), and times ``--reps`` pairs of
+``bench.sample`` runs, one per variant, so JIT/codegen warmth is shared
+instead of biasing whichever variant runs first.
 
-Round-13 calibration: a HEAD-vs-HEAD null run (identical code on both
-sides) showed the fixed old→new rep order carries a SYSTEMATIC bias —
-identical plans read anywhere from 0.86x to 1.25x because whichever
-variant runs second in a pair inherits the first's warmth and dodges
-its cleanup.  The rep loop now ALTERNATES pair order (old→new,
-new→old, ...) so ordering effects cancel, and an even ``--reps``
-(default 6) balances the two orders exactly.  Wins below ~1.1x on
-noisy keys should additionally be confirmed against the null spread.
+A HEAD-vs-HEAD null run (identical code on both sides) showed that a
+fixed old→new order carries a systematic bias: identical plans read
+anywhere from 0.86x to 1.25x because the variant run second in a pair
+inherits the first's warmth and dodges its cleanup.  The pairs
+therefore ALTERNATE order (old→new, new→old, ...), and the default of
+10 pairs balances the two orders exactly.
+
+Each key's line gives both sides' median and quartiles, the old side's
+interquartile distance (the null spread), and in how many pairs the new
+variant was faster.  A gain holds only when the new variant wins at
+least 9 of 10 pairs and the medians differ by more than the null
+spread; a gap inside it is flagged on the line.
 
 Usage:
-    python scripts/opt_ab.py s3spark/queries/pipeline4.py dedup_semdedup [key2 ...] [--reps 6] [--ref REF]
+    python scripts/opt_ab.py s3spark/queries/pipeline4.py dedup_semdedup [key2 ...] [--reps 10] [--ref REF]
 """
 from __future__ import annotations
 
 import argparse
 import importlib.util
 import os
+import statistics
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
+from perfbench.trace import SparkStatus
 from s3spark.session import get_spark
 
 
@@ -37,7 +43,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("module_path")
     ap.add_argument("keys", nargs="+")
-    ap.add_argument("--reps", type=int, default=6)
+    ap.add_argument("--reps", type=int, default=10)
     ap.add_argument("--ref", default="HEAD")
     args = ap.parse_args()
 
@@ -88,6 +94,7 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    status = SparkStatus(spark)
 
     for key in args.keys:
         new_fn = NEW_REG[key].fn
@@ -107,14 +114,15 @@ def main() -> None:
             if r % 2 == 1:  # alternate order: cancels warmth/cleanup bias
                 pair.reverse()
             for fn, acc in pair:
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                acc.append(round(time.perf_counter() - t0, 3))
-        om = sorted(old_t)[len(old_t) // 2]
-        nm = sorted(new_t)[len(new_t) // 2]
+                acc.append(bench.sample(spark, status, fn, sf_dir)["wall_s"])
+        oq1, om, oq3 = statistics.quantiles(old_t, n=4)
+        nq1, nm, nq3 = statistics.quantiles(new_t, n=4)
+        wins = sum(n < o for o, n in zip(old_t, new_t))
         print(
-            f"{key}: OLD median {om:.3f}s {old_t}  NEW median {nm:.3f}s {new_t}"
-            f"  ({om / nm:.2f}x)"
+            f"{key}: OLD median {om:.3f}s [{oq1:.3f}, {oq3:.3f}]"
+            f"  NEW median {nm:.3f}s [{nq1:.3f}, {nq3:.3f}]  ({om / nm:.2f}x)"
+            f"  null spread {oq3 - oq1:.3f}s  NEW faster in {wins}/{args.reps} pairs"
+            + ("  GAP INSIDE NULL SPREAD" if abs(om - nm) <= oq3 - oq1 else "")
         )
 
 

@@ -22,8 +22,9 @@ creation; the committed artifact merges two runs):
     SPARK_GRAFT_CPUS=32 python scripts/sf1_core_panel.py /tmp/panel_c32.json
     SPARK_GRAFT_CPUS=8  python scripts/sf1_core_panel.py /tmp/panel_c8.json
 
-Protocol = scale_stress.time_keys verbatim (median-of-3 after one
-discarded warm-up, driver System.gc() between keys).
+Protocol = scale_stress.time_keys verbatim (median of bench.REPS
+bench.sample runs after one discarded warm-up, driver System.gc()
+between keys).
 """
 from __future__ import annotations
 
@@ -35,6 +36,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import s3spark.queries  # noqa: F401,E402
+from s3spark.io import table  # noqa: E402
 from s3spark.session import get_spark  # noqa: E402
 
 import scale_stress  # noqa: E402  (reuses build + time_keys + DST)
@@ -81,7 +83,7 @@ def build_docs10(spark) -> None:
         "orders", "lineitem", "events", "embeddings",
     ]:
         shutil.copy(f"{src}/{t}.parquet", f"{DOCS10}/{t}.parquet")
-    docs = spark.read.parquet(f"{src}/documents.parquet")
+    docs = table(spark, src, "documents")
     reps = spark.range(scale_stress.REPLICAS).select(
         F.col("id").alias("rep")
     )

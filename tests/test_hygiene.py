@@ -14,6 +14,8 @@
 5. Test modules take the fixture scale directories from
    tests/conftest.py instead of hard-coding them, so the one that
    follows S3SPARK_TEST_SF_DIR is never bypassed by a literal path.
+6. Queries and harnesses read fixture tables through ``io.table``, and
+   every key a harness names is registered.
 """
 
 from __future__ import annotations
@@ -275,14 +277,27 @@ def test_test_modules_take_scale_dirs_from_conftest():
     assert not offenders, "hard-coded scale dirs (use tests.conftest):\n" + "\n".join(offenders)
 
 
+_FIXTURE_FILE = re.compile(
+    r"\b(region|nation|customer|supplier|part|orders|lineitem|events"
+    r"|documents|embeddings)\.parquet"
+)
+
+
 def test_queries_read_fixture_tables_through_io():
-    """A query reads a fixture table with ``io.table``, whose Parquet
-    schema is inferred once per session, never with ``spark.read`` on a
-    path under ``sf_dir``, which infers it with a Spark job every time."""
+    """A query or a harness (``scripts/``, the repo-root scripts) reads a
+    fixture table with ``io.table``, whose Parquet schema is inferred
+    once per session, never with ``spark.read`` on a path under
+    ``sf_dir`` or on a fixture file, which infers it with a Spark job
+    every time."""
+    paths = [p for p in _source_files() if os.path.join("s3spark", "queries") in p]
+    paths += [
+        os.path.join(d, fn)
+        for d in (_REPO, os.path.join(_REPO, "scripts"))
+        for fn in sorted(os.listdir(d))
+        if fn.endswith(".py")
+    ]
     offenders = []
-    for path in _source_files():
-        if os.path.join("s3spark", "queries") not in path:
-            continue
+    for path in paths:
         with open(path, encoding="utf-8") as fh:
             tree = ast.parse(fh.read())
         for node in ast.walk(tree):
@@ -290,6 +305,26 @@ def test_queries_read_fixture_tables_through_io():
                 continue
             for arg in node.args:
                 text = ast.unparse(arg)
-                if "sf_dir" in text and ".parquet" in text:
+                if ("sf_dir" in text and ".parquet" in text) or _FIXTURE_FILE.search(text):
                     offenders.append(f"{os.path.relpath(path, _REPO)}:{node.lineno}: {text}")
     assert not offenders, "fixture tables read around io.table:\n" + "\n".join(offenders)
+
+
+def test_every_key_a_harness_names_is_registered():
+    """A renamed key fails here, not by dropping silently out of the
+    bench headline or by a KeyError after a panel has run for minutes."""
+    import bench
+    import scale_stress
+    from scripts import sf1_core_panel
+
+    named = {
+        *bench.HEADLINE_KEYS,
+        *scale_stress.FACT_KEYS,
+        *scale_stress.DOC_KEYS,
+        scale_stress.ANN_EXACT,
+        *scale_stress.ANN_KEYS,
+        scale_stress.PHASH_KEY,
+        *sf1_core_panel.FACT_PANEL,
+        *sf1_core_panel.DOC_PANEL,
+    }
+    assert not named - set(REGISTRY), f"unregistered keys: {sorted(named - set(REGISTRY))}"
